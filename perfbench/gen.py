@@ -256,13 +256,10 @@ def ensure(workload, seed, root):
         os.makedirs(os.path.join(tmp, "books"))
         os.makedirs(os.path.join(tmp, "slices"))
         for b, name in enumerate(books(workload)):
-            sizes = w["sheets"]
-            n_orders = sizes.get("orders", max(1, sizes["lineitem"] // 4))
-            o = orders(rng, n_orders, b * 1_000_000)
-            tables = {"orders": o,
-                      "lineitem": lineitem(rng, sizes["lineitem"],
-                                           o.column("o_orderkey").to_numpy())}
-            sheets = [(s, tables[s]) for s in sizes]
+            n = w["lineitem_rows"]
+            # the orders only supply the lineitem rows' order keys
+            o = orders(rng, max(1, n // 4), b * 1_000_000)
+            sheets = [("lineitem", lineitem(rng, n, o.column("o_orderkey").to_numpy()))]
             for s, t in sheets:
                 rel = "slices/%s_%s.parquet" % (name, s)
                 pq.write_table(t, os.path.join(tmp, rel))

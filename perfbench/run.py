@@ -8,6 +8,7 @@ Run from the repository root. It builds the engine and the driver from
 source (sbt, offline), generates the workload's inputs from the seed,
 runs the workload in fresh JVMs on local[4], checks the outputs against
 DuckDB, and prints one JSON object as the last line of standard output.
+It exits 1, after printing, when an output check failed.
 
 --trace 0 reports the end-to-end metrics: set-up time (process start to
 a session that has run one job; median over the run's JVMs), the first
@@ -114,7 +115,7 @@ def write_spec(workload, manifest, run_dir):
         for b in books(workload):
             os.link(os.path.join(manifest["dir"], "books", b + ".xlsx"),
                     os.path.join(work_dir, b + ".xlsx"))
-        spec.update(work_dir=work_dir, dialect=w["dialect"],
+        spec.update(work_dir=work_dir,
                     bundles=[dict(b, matches=books(workload)[:b.get("books")])
                              for b in w["bundles"]])
     else:
@@ -228,6 +229,8 @@ def main():
         [round(s, 2) for s in setups]))
     print(json.dumps({"correct": correct, "attempted": attempted, "failed": failed,
                       "metrics": metrics}))
+    if not correct:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

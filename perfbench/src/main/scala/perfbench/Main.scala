@@ -40,7 +40,7 @@ object Main {
     Files.createDirectories(out)
 
     val t0 = System.nanoTime()
-    val spark = graft.LocalSession.build(opts.getOrElse("cpus", "4"))
+    val spark = graft.LocalSession.build(opts("cpus"))
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1).count()
     val buildS = (System.nanoTime() - t0) / 1e9

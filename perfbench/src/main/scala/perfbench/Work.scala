@@ -15,8 +15,9 @@ import graft.sources.excel.XlsxWriter
   * `Pipeline.run` executes over them. */
 final class PipelineWork(spark: SparkSession, spec: JsonNode) extends Work {
   private val workDir = spec.get("work_dir").asText()
-  private val dialect = spec.get("dialect").asBoolean()
-  spark.conf.set(SqliteDialect.ConfKey, dialect.toString)
+  // the workloads' SQL uses SQLite constructs (double-quoted identifiers,
+  // GLOB, strftime), so the dialect rewrite is always on
+  spark.conf.set(SqliteDialect.ConfKey, "true")
 
   private val bundles: Seq[QueryBundle] = Util.elements(spec, "bundles").map { b =>
     QueryBundle(
@@ -85,22 +86,27 @@ final class PipelineWork(spark: SparkSession, spec: JsonNode) extends Work {
   private var reference: Option[Seq[(String, Long, Long)]] = None
   private var rows = 0L
 
-  /** Row count and an order-independent row hash per .hyper table, plus
-    * the byte size of each .xlsx: equal to the first pass's, or the pass
-    * failed. */
+  /** Row count and order-independent row hash of one table. */
+  private def fingerprint(name: String, rs: Seq[Seq[Any]]): (String, Long, Long) =
+    (name, rs.length.toLong, rs.map(_.hashCode.toLong).sum)
+
+  /** Row count and row hash of every table the pass wrote (.hyper tables
+    * through HyperBinary.read, .xlsx sheets through the excel source):
+    * equal to the first pass's, or the pass failed. */
   def check(): Boolean = {
     val fp = bundles.flatMap { b =>
       b.format match {
         case ExportFormat.Hyper =>
           HyperBinary.read(outPath(b).resolve("extract.hyper").toString).map {
-            case (name, _, rs) =>
-              (name, rs.length.toLong, rs.map(r => r.toSeq.hashCode.toLong).sum)
+            case (name, _, rs) => fingerprint(name, rs.toSeq.map(_.toSeq))
           }
         case ExportFormat.Excel =>
-          Seq((b.exportFileName, -1L, Files.size(outPath(b))))
+          b.queries.map(q => fingerprint(q.name,
+            spark.read.format("excel").option("sheet", q.name).load(outPath(b).toString)
+              .collect().toSeq.map(_.toSeq)))
       }
     }
-    rows = fp.filter(_._2 >= 0).map(_._2).sum
+    rows = fp.map(_._2).sum
     if (reference.isEmpty) reference = Some(fp)
     reference.contains(fp)
   }
@@ -122,16 +128,16 @@ final class PipelineWork(spark: SparkSession, spec: JsonNode) extends Work {
     p.registerViews(fsheets)
     forceViews(fsheets)
     try bundles.foreach { b =>
-      if (dialect)
-        for (q <- b.queries; m <- b.fileMatches)
-          tr.span("dialect.rewrite")(SqliteDialect.rewrite(q.formatQuery(matched(m))))
+      for (q <- b.queries; m <- b.fileMatches)
+        tr.span("dialect.rewrite")(SqliteDialect.rewrite(q.formatQuery(matched(m))))
       val perQuery = tr.span("sql.analyze")(p.queryDataFrames(b, matched))
       tr.span("sql.exec")(perQuery.values.flatten.foreach { case (_, df) =>
         df.write.format("noop").mode("overwrite").save()
       })
       val cached = perQuery.map { case (q, rs) => q -> rs.map { case (f, df) => (f, df.cache()) } }
       cached.values.flatten.foreach(_._2.count())
-      // the same operator calls Pipeline.combineBundle makes
+      // the same operator calls Pipeline.combineBundle makes; checked
+      // against combineBundle below, so the copy cannot drift unnoticed
       val combined = tr.span("combine.plan")(b.queries.map { q =>
         val rs = cached(q.name)
         val df =
@@ -145,6 +151,12 @@ final class PipelineWork(spark: SparkSession, spec: JsonNode) extends Work {
         tr.span(if (q.pivotTable) "combine.pivot_exec" else "combine.concat_exec")(
           df.write.format("noop").mode("overwrite").save())
       }
+      val program = p.combineBundle(b, matched).toMap
+      combined.foreach { case (q, df) =>
+        if (!sameRows(df, program(q.name)))
+          throw new IllegalStateException(
+            s"combine probe of ${q.name} differs from Pipeline.combineBundle")
+      }
       if (b.format == ExportFormat.Hyper) {
         val tables = combined.map { case (q, df) => (q.name, df.cache()) }
         tables.foreach(_._2.count())
@@ -155,6 +167,13 @@ final class PipelineWork(spark: SparkSession, spec: JsonNode) extends Work {
       }
       cached.values.flatten.foreach(_._2.unpersist())
     } finally p.dropViews(fsheets)
+  }
+
+  /** Same column names and types, and the same rows in any order. */
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean = {
+    def cols(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    cols(a) == cols(b) && sorted(a) == sorted(b)
   }
 
   override def counters: String = Json.obj(

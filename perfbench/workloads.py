@@ -18,8 +18,7 @@ WORKLOADS = {
     "books_scan": {
         "kind": "pipeline",
         "books": 8,
-        "sheets": {"lineitem": 8000},
-        "dialect": True,
+        "lineitem_rows": 8000,
         "bundles": [
             {"export": "scan_counts", "format": "hyper", "sheets": ["lineitem"],
              "queries": [
