@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.operators.Combinators
-import graft.sinks.{HyperEquivalentSink, HyperSink}
+import graft.sinks.HyperEquivalentSink
 import graft.sources.excel.XlsxWriter
 
 /** The reference's QueryIterator orchestration (query_iterator.py:32-55),
@@ -21,13 +21,7 @@ import graft.sources.excel.XlsxWriter
   * `.hyper` suffix — we suffix by actual format), Q7 (substring format
   * dispatch — exact enum).
   */
-class Pipeline(
-    spark: SparkSession,
-    workingDir: String,
-    hyperSink: HyperSink = null) {
-
-  private val sink: HyperSink =
-    if (hyperSink != null) hyperSink else new HyperEquivalentSink()
+class Pipeline(spark: SparkSession, workingDir: String) {
 
   /** A4 — directory matcher (query_iterator.py:58-86): list Excel files,
     * resolve each match substring to the first file containing it.
@@ -106,9 +100,8 @@ class Pipeline(
   /** A11/A12 — the per-query combine step: pivot-stack or positional
     * concat across the bundle's matched files, returning the final
     * (table name, DataFrame) pairs the sinks receive. Exposed separately
-    * from [[exportBundle]] so parity tests (HyperArtifactParitySpec) can
-    * compare the combined results row-for-row without going through a
-    * sink file.
+    * from [[exportBundle]] so callers can time or inspect the combined
+    * tables without going through a sink file.
     */
   def combineBundle(
       bundle: QueryBundle, matched: Map[String, String]): Seq[(String, DataFrame)] = {
@@ -141,7 +134,7 @@ class Pipeline(
     bundle.format match {
       case ExportFormat.Hyper =>
         val out = Paths.get(workingDir, bundle.exportFileName + ".hyper").toString
-        sink.write(out, combined)
+        new HyperEquivalentSink().write(out, combined)
         out
       case ExportFormat.Excel =>
         val out = Paths.get(workingDir, bundle.exportFileName + ".xlsx").toString

@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
@@ -11,8 +11,8 @@ import org.apache.spark.sql.types._
   * length extensions, 16-bit little-endian match offsets). Implemented
   * from the published spec — the `.hyper` container declares
   * `"compressionMethod": "lz4"` and its data blocks decode with exactly
-  * this algorithm (verified against the reference's committed artifact,
-  * see HYPER_FORMAT.md).
+  * this algorithm (HYPER_FORMAT.md). HyperBinarySpec cross-checks it
+  * against lz4-java in both directions.
   */
 object Lz4Block {
 
@@ -107,35 +107,25 @@ object Lz4Block {
   }
 }
 
-/** Binary `.hyper` container writer/reader — the round-5 spike closing
-  * the "real Hyper sink" gap as far as the observable structure allows.
-  *
-  * Everything reproduced here was reverse-read from PUBLIC observables:
-  * the reference's committed `complaints_by_bank.hyper` and the DDL/COPY
-  * trace in its `hyperd.log` (reference query_iterator.py:170-195). The
-  * byte-level findings, and the exact fields that still block a
-  * Tableau-openable file, are documented in HYPER_FORMAT.md. In short,
-  * this container reproduces the artifact's structure —
+/** Binary `.hyper` container writer/reader, and the one Spark → Hyper
+  * type table ([[catalogType]]). The structure was read from the
+  * reference's committed `complaints_by_bank.hyper` and the DDL/COPY
+  * trace in its `hyperd.log` (reference query_iterator.py:170-195);
+  * HYPER_FORMAT.md records the byte map. The container holds —
   *
   *   - "Hyper\x08\x00\x00\x01" header page with u64 section offsets,
-  *   - the catalog as the artifact's exact JSON schema (namespaces /
-  *     roles / relations / attributes / typed columns / nullCounts),
-  *     '~'-terminated, 32-bit-framed, at offset 0x2000,
+  *   - the catalog in the artifact's JSON schema (namespaces / roles /
+  *     relations / attributes / typed columns / nullCounts),
+  *     '~'-terminated, CRC32C-framed, at offset 0x2000,
   *   - one LZ4 block per table ([u32 uncompressed length][LZ4 stream]
-  *     [u32 frame value]; row count + column offsets + null bitmaps +
-  *     column data + string heap inside),
+  *     [u32 frame]; row count + column offsets + null bitmaps + column
+  *     data + string heap inside),
   *   - the "HyperDB\0" genesis block holding the empty-catalog copy,
   *
-  * — and files written here round-trip bit-exactly through [[read]],
-  * while [[catalogJsons]] parses the reference artifact itself. The
-  * 32-bit frame algorithm was identified in round 5 as raw CRC32C
-  * (no pre/post inversion; see [[crc32cRaw]]) and every frame this
-  * writer emits reproduces the artifact's values for the same bytes.
-  * What it does NOT claim: the interior block/directory record
-  * semantics past the first data block remain unidentified from the
-  * single 2-table sample, so the real hyperd may still reject the
-  * file's directory. HYPER_FORMAT.md names the remaining blocker
-  * precisely.
+  * — and files written here round-trip bit-exactly through [[read]].
+  * Every frame is raw CRC32C (see [[crc32cRaw]]). The table blocks use
+  * this writer's own layout, not hyperd's native column encodings or its
+  * object index, so the real hyperd cannot open the file.
   */
 object HyperBinary {
 
@@ -146,10 +136,9 @@ object HyperBinary {
     * are observed verbatim in the artifact; the remaining names follow
     * the same convention and are marked inferred in HYPER_FORMAT.md.
     */
-  def catalogType(dt: DataType, compatInt32: Boolean): String = dt match {
+  def catalogType(dt: DataType): String = dt match {
     case StringType => """["Varchar", 1000, "nullable"]"""
     case IntegerType | ShortType | ByteType => """["Integer", "nullable"]"""
-    case LongType if compatInt32 => """["Integer", "nullable"]"""
     case LongType => """["BigInt", "nullable"]"""
     case DoubleType | FloatType => """["Double", "nullable"]"""
     case BooleanType => """["Bool", "nullable"]"""
@@ -180,11 +169,10 @@ object HyperBinary {
     * preamble, then one relation per table with attributes, nullCounts,
     * and the block-storage markers.
     */
-  private[sinks] def catalogJson(tables: Seq[(String, StructType, Array[Long])],
-      compatInt32: Boolean): String = {
+  private[sinks] def catalogJson(tables: Seq[(String, StructType, Array[Long])]): String = {
     val relations = tables.zipWithIndex.map { case ((name, schema, nullCounts), i) =>
       val attrs = schema.fields.map { f =>
-        s"""{"name": "${jsonEscape(f.name)}", "type": ${catalogType(f.dataType, compatInt32)}}"""
+        s"""{"name": "${jsonEscape(f.name)}", "type": ${catalogType(f.dataType)}}"""
       }.mkString("[", ", ", "]")
       s"""{"oid": ${10004 + i}, "name": "${jsonEscape(name)}", "owner": 1, """ +
         """"dependencies": [], "reverseDependencies": [], "parent": 32, """ +
@@ -201,12 +189,10 @@ object HyperBinary {
   }
 
   /** Raw CRC32C (Castagnoli, reflected, poly 0x1EDC6F41) with NO
-    * pre/post inversion — the engine's actual 32-bit frame algorithm,
-    * identified round 5 by brute-forcing candidate (algorithm, span)
-    * pairs against every frame value in the committed artifact
-    * (HYPER_FORMAT.md §3: all five known frames match, and the header
-    * pages CRC to zero — the classic self-verifying-page residual of a
-    * raw reflected CRC stored little-endian at the span's end).
+    * pre/post inversion — the engine's 32-bit frame algorithm, identified
+    * against every frame value in the committed artifact (HYPER_FORMAT.md
+    * §3). Stored little-endian at a span's end, it makes the span CRC to
+    * zero, which is how the header pages verify themselves.
     */
   private val crc32cTable: Array[Int] = Array.tabulate(256) { i =>
     var c = i
@@ -387,8 +373,10 @@ object HyperBinary {
     * of a driver OOM.
     */
   def write(path: String, tables: Seq[(String, DataFrame)],
-      compatInt32: Boolean = false, maxRows: Int = 1000000): Unit = {
+      maxRows: Int = 1000000): Unit = {
     require(maxRows > 0, s"HyperBinary: maxRows must be positive (got $maxRows)")
+    // unmappable types fail before any table's query runs
+    tables.foreach { case (_, df) => df.schema.fields.foreach(f => catalogType(f.dataType)) }
     val collected = tables.map { case (name, df) =>
       val rows = df.limit(maxRows + 1).collect()
       if (rows.length > maxRows)
@@ -403,8 +391,8 @@ object HyperBinary {
         .map(c => rows.count(_.isNullAt(c)).toLong).toArray
       (name, schema, nullCounts)
     }
-    val catalog = catalogJson(withNulls, compatInt32).getBytes(StandardCharsets.UTF_8)
-    val genesis = catalogJson(Seq.empty, compatInt32).getBytes(StandardCharsets.UTF_8)
+    val catalog = catalogJson(withNulls).getBytes(StandardCharsets.UTF_8)
+    val genesis = catalogJson(Seq.empty).getBytes(StandardCharsets.UTF_8)
 
     val out = new java.io.ByteArrayOutputStream(1 << 16)
     def pad(to: Int): Unit = while (out.size() < to) out.write(0)
@@ -479,15 +467,20 @@ object HyperBinary {
     // patched last so they cover every other patched field
     patch.putInt(0x0ffc, crc32cRaw(bytes, 0x0000, 0x0ffc))
     patch.putInt(0x1ffc, crc32cRaw(bytes, 0x1000, 0x1ffc))
-    Files.write(Paths.get(path), bytes)
+    // build the file next to `path` and rename it into place, so a
+    // reader never sees a partial file and a failed write keeps the old one
+    val target = Paths.get(path).toAbsolutePath
+    val tmp = Files.createTempFile(target.getParent, s".${target.getFileName}.", ".tmp")
+    try {
+      Files.write(tmp, bytes)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
 
-  /** Every embedded catalog JSON in the file, in offset order —
-    * brace-matched from the `compressionMethod` marker (the live catalog
-    * is '~'-terminated, the genesis copy is not; neither terminator is
-    * relied on). Works on files from [[write]] AND on the reference's
-    * committed artifact (which holds the live catalog at 0x2000 and the
-    * genesis copy inside the HyperDB block).
+  /** Every embedded catalog JSON in the file, in offset order (the live
+    * catalog, then the genesis copy) — brace-matched from the
+    * `compressionMethod` marker, since the live catalog is '~'-terminated
+    * and the genesis copy is not.
     */
   def catalogJsons(path: String): Seq[String] = {
     val data = Files.readAllBytes(Paths.get(path))

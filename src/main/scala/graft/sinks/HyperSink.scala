@@ -1,105 +1,34 @@
 package graft.sinks
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types._
 
-/** Spark type → Tableau Hyper SqlType DDL mapping.
-  *
-  * Reproduces the reference's dtype map (query_iterator.py:217-227):
-  * int64→INT (32-bit!), float64→DOUBLE, datetime→TIMESTAMP,
-  * object→VARCHAR(1000). Two deliberate divergences (SURVEY.md §2.F):
-  *   - Q9: long maps to BIGINT by default (the reference's silent 64→32
-  *     bit narrowing can overflow big ids); `compatInt32 = true` restores
-  *     bit-exact reference behavior.
-  *   - unmapped types get a clear error instead of a KeyError
-  *     (query_iterator.py:233), and the full Spark primitive set is
-  *     covered.
+/** The pipeline's `.hyper` sink: each bundle becomes one extract
+  * directory holding a single file, `<path>/extract.hyper`, written by
+  * [[HyperBinary]] (the only module that knows the container format and
+  * the Spark → Hyper type table). The reference sinks each bundle to one
+  * `.hyper` file through the out-of-process hyperd daemon
+  * (query_iterator.py:170-195); no JVM Hyper library exists, so the
+  * container is this repo's own reproduction of the artifact's observable
+  * structure (HYPER_FORMAT.md). Each table's query and combine run once:
+  * [[HyperBinary.write]] collects the rows and nothing else reads them.
   */
-object SqlTypeMapper {
-  def hyperType(dt: DataType, compatInt32: Boolean = false): String = dt match {
-    case LongType => if (compatInt32) "INTEGER" else "BIGINT"
-    case IntegerType | ShortType | ByteType => "INTEGER"
-    case DoubleType | FloatType => "DOUBLE PRECISION"
-    case TimestampType => "TIMESTAMP"
-    case DateType => "DATE"
-    case BooleanType => "BOOLEAN"
-    case StringType => "VARCHAR(1000)"
-    case d: DecimalType => s"NUMERIC(${d.precision},${d.scale})"
-    case other => throw new IllegalArgumentException(
-      s"HyperSink: no Hyper SqlType mapping for Spark type ${other.sql}; " +
-        "cast the column to a supported primitive first")
-  }
-}
+class HyperEquivalentSink {
 
-/** Sink producing a Tableau-Hyper-equivalent extract.
-  *
-  * The real `.hyper` container is a proprietary binary (LZ4 blocks + JSON
-  * catalog, written by the out-of-process hyperd daemon the reference
-  * drives over a named pipe — reference query_iterator.py:170-195,
-  * observed protocol hyperd.log:3513/3523). No JVM Hyper library exists
-  * in this environment, so this sink emits the *logical equivalent*,
-  * which is what correctness is judged on (schema + rows):
-  *
-  *   <path>/catalog.json   — every table's name + Hyper DDL (the exact
-  *                           CREATE TABLE shape hyperd logs)
-  *   <path>/<table>/       — the rows, as parquet
-  *   <path>/extract.hyper  — a single-file binary container reproducing
-  *                           the committed artifact's observable
-  *                           structure ([[HyperBinary]]): magic, framed
-  *                           catalog JSON in the real catalog schema,
-  *                           LZ4 data blocks, HyperDB genesis block.
-  *                           Round-trips through [[HyperBinary.read]];
-  *                           NOT yet loadable by the real hyperd — the
-  *                           two proprietary blockers (frame-checksum
-  *                           algorithm, directory record semantics) are
-  *                           documented in HYPER_FORMAT.md §3.
-  *
-  * A real Hyper writer can implement [[HyperSink]] against the same
-  * calls if the remaining format internals ever become documented.
-  */
-trait HyperSink {
-  /** CREATE_AND_REPLACE semantics: wipe and rewrite the whole extract. */
-  def write(path: String, tables: Seq[(String, DataFrame)]): Unit
-}
-
-class HyperEquivalentSink(compatInt32: Boolean = false) extends HyperSink {
-
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  override def write(path: String, tables: Seq[(String, DataFrame)]): Unit = {
+  /** CREATE_AND_REPLACE (query_iterator.py:173): afterwards `<path>`
+    * holds exactly the new extract. The previous extract is replaced
+    * only once the new file is complete, so an export that fails (row
+    * cap, unmappable type) leaves it readable.
+    */
+  def write(path: String, tables: Seq[(String, DataFrame)]): Unit = {
     val root = Paths.get(path)
-    if (Files.exists(root)) { // CREATE_AND_REPLACE (query_iterator.py:173)
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
     Files.createDirectories(root)
-    val ddls = tables.map { case (name, df) =>
-      val cols = df.schema.fields.map { f =>
-        val t = SqlTypeMapper.hyperType(f.dataType, compatInt32)
-        s"""{"name":"${jsonEscape(f.name)}","type":"$t","nullable":${f.nullable}}"""
-      }.mkString("[", ",", "]")
-      val colDdl = df.schema.fields.map { f =>
-        s""""${f.name.replace("\"", "\"\"")}" ${SqlTypeMapper.hyperType(f.dataType, compatInt32)}"""
-      }.mkString(", ")
-      // the DDL string mirrors the CREATE TABLE statements hyperd logs
-      // (hyperd.log:3513, 3531)
-      val ddl = s"""CREATE TABLE "public"."$name" ($colDdl)"""
-      df.coalesce(1).write.mode("overwrite")
-        .parquet(root.resolve(name).toString)
-      s"""{"name":"${jsonEscape(name)}","columns":$cols,"ddl":"${jsonEscape(ddl)}"}"""
-    }
-    val catalog = s"""{"format":"hyper-equivalent","tables":[${ddls.mkString(",")}]}"""
-    Files.write(root.resolve("catalog.json"),
-      catalog.getBytes(StandardCharsets.UTF_8))
-    HyperBinary.write(root.resolve("extract.hyper").toString, tables, compatInt32)
+    val extract = root.resolve("extract.hyper")
+    HyperBinary.write(extract.toString, tables)
+    Files.list(root).toArray(n => new Array[Path](n))
+      .filterNot(_ == extract)
+      .foreach(p => Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+        .forEach(q => Files.delete(q)))
   }
 }

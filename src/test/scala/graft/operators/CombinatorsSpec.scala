@@ -4,7 +4,6 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
-import graft.sinks.SqlTypeMapper
 import org.apache.spark.sql.types._
 
 class CombinatorsSpec extends SparkSpec {
@@ -67,18 +66,5 @@ class CombinatorsSpec extends SparkSpec {
     val ok = Combinators.positionalConcat(
       Seq(("a", big, Seq(col("n")))), maxRowsPerPart = 10)
     assert(ok.count() == 10)
-  }
-
-  test("SqlTypeMapper: reference dtype map + divergences (Q9)") {
-    assert(SqlTypeMapper.hyperType(LongType) == "BIGINT")
-    assert(SqlTypeMapper.hyperType(LongType, compatInt32 = true) == "INTEGER")
-    assert(SqlTypeMapper.hyperType(DoubleType) == "DOUBLE PRECISION")
-    assert(SqlTypeMapper.hyperType(StringType) == "VARCHAR(1000)")
-    assert(SqlTypeMapper.hyperType(TimestampType) == "TIMESTAMP")
-    assert(SqlTypeMapper.hyperType(BooleanType) == "BOOLEAN")
-    val e = intercept[IllegalArgumentException] {
-      SqlTypeMapper.hyperType(ArrayType(LongType))
-    }
-    assert(e.getMessage.contains("no Hyper SqlType mapping"))
   }
 }

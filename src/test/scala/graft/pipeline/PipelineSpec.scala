@@ -5,13 +5,14 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.Row
 
 import graft.SparkSpec
+import graft.sinks.HyperBinary
 import graft.sources.excel.XlsxWriter
 
 /** End-to-end pipeline parity: reproduces the reference's committed
   * example run (run_main_example.py:10-59) — two workbooks, two queries
   * (one pivot-stacked, one positionally concatenated), exported to both
   * sinks — and asserts the golden output shapes from FIXTURES.md §1
-  * (.hyper catalog DDL at hyperd.log:3513/3531).
+  * (.hyper catalog types after hyperd.log:3513/3531).
   */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -94,25 +95,40 @@ class PipelineSpec extends SparkSpec {
     val dir = setupDir()
     val outs = new Pipeline(spark, dir).run(bundles)
     assert(outs == Seq(s"$dir/complaints_by_bank.hyper"))
+    val out = Paths.get(dir, "complaints_by_bank.hyper")
+    assert(Files.list(out).toArray.map(_.toString).toSeq ==
+      Seq(out.resolve("extract.hyper").toString))
+    val extract = out.resolve("extract.hyper").toString
+    val tables = HyperBinary.read(extract).map { case (name, schema, rows) =>
+      name -> (schema.fieldNames.toSeq, rows.map(r => Row(r.toSeq: _*)).toSeq)
+    }.toMap
+    assert(tables.keySet ==
+      Set("complaint_counts_by_company", "num_of_complaints_per_company"))
 
-    val catalog = new String(Files.readAllBytes(
-      Paths.get(dir, "complaints_by_bank.hyper", "catalog.json")))
-    // golden DDL shapes (hyperd.log:3513 / 3531, FIXTURES.md §1)
-    assert(catalog.contains(""""name":"complaint_counts_by_company""""))
-    assert(catalog.contains(""""name":"index","type":"VARCHAR(1000)""""))
-    assert(catalog.contains(""""name":"num_of_complaints_per_company""""))
-    assert(catalog.contains(
-      """"name":"consumer_complaints.xlsx_company","type":"VARCHAR(1000)""""))
-    assert(catalog.contains(
-      """"name":"consumer_complaints1_number_of_complaints","type":"BIGINT""""))
+    // golden column types (hyperd.log:3513 / 3531, FIXTURES.md §1), with
+    // the count columns widened to BigInt (SURVEY.md Q9)
+    val relations = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(HyperBinary.catalogJsons(extract).head).get("relations")
+    val types = (0 until relations.size()).flatMap { r =>
+      val attrs = relations.get(r).get("attributes")
+      (0 until attrs.size()).map(a =>
+        attrs.get(a).get("name").asText() -> attrs.get(a).get("type").toString)
+    }.toMap
+    val varchar = """["Varchar",1000,"nullable"]"""
+    val bigint = """["BigInt","nullable"]"""
+    assert(types("index") == varchar)
+    assert(types("company") == varchar)
+    assert(types("number_of_complaints") == bigint)
+    assert(types("consumer_complaints.xlsx_company") == varchar)
+    assert(types("consumer_complaints.xlsx_number_of_complaints") == bigint)
+    assert(types("consumer_complaints1_number_of_complaints") == bigint)
 
     // pivot table: index column carries the source file basename and the
     // two identical workbooks stack vertically
-    val pivot = spark.read.parquet(
-      s"$dir/complaints_by_bank.hyper/complaint_counts_by_company")
-    assert(pivot.columns.toSeq ==
+    val (pivotCols, pivotRowsAll) = tables("complaint_counts_by_company")
+    assert(pivotCols ==
       Seq("index", "company", "product", "number_of_complaints"))
-    val pivotRows = pivot.orderBy("index", "product").collect()
+    val pivotRows = pivotRowsAll.sortBy(r => (r.getString(0), r.getString(2)))
     assert(pivotRows.length == 4) // 2 files × 2 products for BofA
     assert(pivotRows(0) == Row("consumer_complaints",
       "Bank of America", "Credit reporting", 1L))
@@ -121,15 +137,13 @@ class PipelineSpec extends SparkSpec {
     assert(pivotRows(2).getString(0) == "consumer_complaints1")
 
     // concat table: positionally aligned, match-prefixed columns
-    val concat = spark.read.parquet(
-      s"$dir/complaints_by_bank.hyper/num_of_complaints_per_company")
-    assert(concat.columns.toSeq == Seq(
+    val (concatCols, concatRowsAll) = tables("num_of_complaints_per_company")
+    assert(concatCols == Seq(
       "consumer_complaints.xlsx_company",
       "consumer_complaints.xlsx_number_of_complaints",
       "consumer_complaints1_company",
       "consumer_complaints1_number_of_complaints"))
-    val concatRows = concat
-      .orderBy("`consumer_complaints.xlsx_company`").collect()
+    val concatRows = concatRowsAll.sortBy(_.getString(0))
     assert(concatRows.length == 2)
     assert(concatRows(0) == Row("Bank of America", 3L, "Bank of America", 3L))
     assert(concatRows(1) == Row("Wells Fargo & Company", 2L,

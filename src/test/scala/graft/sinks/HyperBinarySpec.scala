@@ -1,16 +1,38 @@
 package graft.sinks
 
-import java.nio.file.Files
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import java.util.zip.CRC32C
 
+import net.jpountz.lz4.LZ4Factory
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 
+/** The `.hyper` writer checked on its own output: every input is built
+  * here, so the suite needs no file outside the repository. */
 class HyperBinarySpec extends SparkSpec {
   import spark.implicits._
 
-  private val artifact = "/root/reference/complaints_by_bank.hyper"
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Raw CRC32C (init 0, no final inversion) from the JDK's standard
+    * CRC32C: by linearity the two inversions cancel against the CRC of
+    * as many zero bytes. Independent of [[HyperBinary.crc32cRaw]]. */
+  private def rawCrc(b: Array[Byte], from: Int, until: Int): Int = {
+    def std(bytes: Array[Byte], off: Int): Int = {
+      val c = new CRC32C
+      c.update(bytes, off, until - from)
+      c.getValue.toInt
+    }
+    std(b, from) ^ std(new Array[Byte](until - from), 0)
+  }
+
+  private def emptyDf(fields: (String, DataType)*) = spark.createDataFrame(
+    spark.sparkContext.parallelize(Seq.empty[Row], 1),
+    StructType(fields.map { case (n, t) => StructField(n, t) }))
 
   test("LZ4 block codec round-trips arbitrary and repetitive payloads") {
     val rnd = new scala.util.Random(7)
@@ -29,34 +51,6 @@ class HyperBinarySpec extends SparkSpec {
     // repetitive data genuinely compresses (matches emitted, not all-literal)
     val rep = ("the quick brown fox " * 500).getBytes
     assert(Lz4Block.compress(rep).length < rep.length / 10)
-  }
-
-  test("committed reference artifact: magic, catalog JSONs, relations") {
-    // Everything asserted here is the OBSERVABLE structure the writer
-    // mirrors (HYPER_FORMAT.md) — reading the reference's committed
-    // extract with our own parser.
-    val data = Files.readAllBytes(java.nio.file.Paths.get(artifact))
-    assert(new String(data, 0, 5) == "Hyper")
-    assert(data(5) == 8 && data(8) == 1)
-
-    val catalogs = HyperBinary.catalogJsons(artifact)
-    assert(catalogs.length == 2, "expected live catalog + genesis copy")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val live = mapper.readTree(catalogs.head)
-    val genesis = mapper.readTree(catalogs(1))
-    assert(live.get("compressionMethod").asText() == "lz4")
-    assert(genesis.get("relations").size() == 0, "genesis catalog is empty")
-
-    val rels = live.get("relations")
-    assert(rels.size() == 2)
-    assert(rels.get(0).get("name").asText() == "complaint_counts_by_company")
-    assert(rels.get(1).get("name").asText() == "num_of_complaints_per_company")
-    val attrs0 = rels.get(0).get("attributes")
-    assert(attrs0.size() == 4)
-    assert(attrs0.get(0).get("name").asText() == "index")
-    assert(attrs0.get(0).get("type").toString == """["Varchar",1000,"nullable"]""")
-    assert(attrs0.get(3).get("name").asText() == "number_of_complaints")
-    assert(attrs0.get(3).get("type").toString == """["Integer","nullable"]""")
   }
 
   test("writer output round-trips schema, rows, and nulls bit-exactly") {
@@ -88,8 +82,7 @@ class HyperBinarySpec extends SparkSpec {
 
     // nullCounts in the catalog reflect the data (observable-structure
     // fidelity: the artifact records real per-column null counts)
-    val live = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(HyperBinary.catalogJsons(path).head)
+    val live = mapper.readTree(HyperBinary.catalogJsons(path).head)
     assert(live.get("relations").get(0).get("nullCounts").toString == "[1,1,1,1,1,1,1]")
   }
 
@@ -133,116 +126,149 @@ class HyperBinarySpec extends SparkSpec {
     assert(HyperBinary.read(path).head._3.length == 50)
   }
 
-  test("writer catalog matches the artifact's relations for the same schema") {
-    // Rebuild the committed extract's two tables from their observed
-    // schema (hyperd.log CREATE TABLE trace / golden DDL) and compare
-    // our catalog's relation entries field-by-field with the artifact's
-    // — oids included, since ours are assigned the same way (10004+i).
-    val t1 = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq.empty[Row], 1),
-      StructType(Seq(
-        StructField("index", StringType), StructField("company", StringType),
-        StructField("product", StringType),
-        StructField("number_of_complaints", IntegerType))))
-    val t2 = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq.empty[Row], 1),
-      StructType(Seq(
-        StructField("consumer_complaints.xlsx_company", StringType),
-        StructField("consumer_complaints.xlsx_number_of_complaints", IntegerType),
-        StructField("consumer_complaints1.xlsx_company", StringType),
-        StructField("consumer_complaints1.xlsx_number_of_complaints", IntegerType))))
+  test("LZ4 block codec interoperates with lz4-java in both directions") {
+    val lz4 = LZ4Factory.safeInstance()
+    val rnd = new scala.util.Random(11)
+    val text = ("SELECT company, COUNT(*) FROM sheet GROUP BY company; " * 400).getBytes
+    val cases = Seq(
+      "abc".getBytes,
+      Array.fill(70000)((rnd.nextInt(3) + 'a').toByte), // matches past the 64 KiB window
+      Array.fill(5000)(rnd.nextInt().toByte),
+      Array.fill(300)(0.toByte),
+      text,
+      text.take(4000) ++ Array.fill(66000)(rnd.nextInt().toByte) ++ text.take(4000))
+    cases.foreach { payload =>
+      for (theirs <- Seq(lz4.fastCompressor().compress(payload),
+          lz4.highCompressor().compress(payload))) {
+        val (back, consumed) = Lz4Block.decompress(theirs, 0, payload.length)
+        assert(back.sameElements(payload), s"lz4-java → Lz4Block at len ${payload.length}")
+        assert(consumed == theirs.length)
+      }
+      val ours = Lz4Block.compress(payload)
+      val back = new Array[Byte](payload.length)
+      val n = lz4.safeDecompressor().decompress(ours, 0, ours.length, back, 0)
+      assert(n == payload.length && back.sameElements(payload),
+        s"Lz4Block → lz4-java at len ${payload.length}")
+    }
+  }
+
+  test("catalog: live catalog + empty genesis copy; relation fields as recorded") {
+    // the reference extract's two tables (hyperd.log CREATE TABLE trace);
+    // the expected relation fields are the ones HYPER_FORMAT.md §2 records
+    // for its catalog
+    val t1 = emptyDf("index" -> StringType, "company" -> StringType,
+      "product" -> StringType, "number_of_complaints" -> IntegerType)
+    val t2 = emptyDf(
+      "consumer_complaints.xlsx_company" -> StringType,
+      "consumer_complaints.xlsx_number_of_complaints" -> IntegerType,
+      "consumer_complaints1.xlsx_company" -> StringType,
+      "consumer_complaints1.xlsx_number_of_complaints" -> IntegerType)
     val path = Files.createTempDirectory("hyperbin").resolve("golden.hyper").toString
     HyperBinary.write(path,
       Seq("complaint_counts_by_company" -> t1, "num_of_complaints_per_company" -> t2))
 
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val ours = mapper.readTree(HyperBinary.catalogJsons(path).head).get("relations")
-    val theirs = mapper.readTree(HyperBinary.catalogJsons(artifact).head).get("relations")
-    for (r <- 0 until 2; field <- Seq("oid", "name", "owner", "parent",
-        "attributes", "partitionKey", "partitionedRelation", "type")) {
-      assert(ours.get(r).get(field) == theirs.get(r).get(field),
-        s"relation $r field $field differs: ${ours.get(r).get(field)} vs ${theirs.get(r).get(field)}")
+    val data = Files.readAllBytes(Paths.get(path))
+    assert(new String(data, 0, 5, StandardCharsets.US_ASCII) == "Hyper")
+    assert(data(5) == 8 && data(8) == 1)
+    val catalogs = HyperBinary.catalogJsons(path)
+    assert(catalogs.length == 2, "expected live catalog + genesis copy")
+    val live = mapper.readTree(catalogs.head)
+    val genesis = mapper.readTree(catalogs(1))
+    assert(live.get("compressionMethod").asText() == "lz4")
+    assert(genesis.get("relations").size() == 0, "genesis catalog is empty")
+
+    val varchar = """["Varchar",1000,"nullable"]"""
+    val integer = """["Integer","nullable"]"""
+    val rels = live.get("relations")
+    assert(rels.size() == 2)
+    for ((name, types, r) <- Seq(
+        ("complaint_counts_by_company", Seq(varchar, varchar, varchar, integer), 0),
+        ("num_of_complaints_per_company", Seq(varchar, integer, varchar, integer), 1))) {
+      val rel = rels.get(r)
+      assert(rel.get("name").asText() == name)
+      assert(rel.get("oid").asLong() == 10004L + r)
+      assert(rel.get("owner").asLong() == 1L)
+      assert(rel.get("parent").asLong() == 32L)
+      assert(rel.get("partitionKey").asLong() == 4294967295L)
+      assert(!rel.get("partitionedRelation").asBoolean())
+      assert(rel.get("type").asText() == "block")
+      val attrs = rel.get("attributes")
+      assert((0 until attrs.size()).map(a => attrs.get(a).get("type").toString) == types)
+      assert(rel.get("nullCounts").toString == "[0,0,0,0]")
     }
-    // nullCounts: ours are 0 (no rows), artifact's observed are all 0 too
-    assert(ours.get(0).get("nullCounts").toString ==
-      theirs.get(0).get("nullCounts").toString)
+    assert(rels.get(0).get("attributes").get(0).get("name").asText() == "index")
+    assert(rels.get(1).get("attributes").get(3).get("name").asText() ==
+      "consumer_complaints1.xlsx_number_of_complaints")
   }
 
-  test("frame algorithm is raw CRC32C: every known artifact frame reproduces") {
-    // Round-5 identification (HYPER_FORMAT.md §3): the engine's 32-bit
-    // frame values are CRC32C with NO pre/post inversion. Each assertion
-    // recomputes a frame from the committed artifact's own bytes with
-    // our implementation and compares with the stored value.
-    val data = Files.readAllBytes(java.nio.file.Paths.get(artifact))
-    val buf = java.nio.ByteBuffer.wrap(data).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+  test("CRC32C: raw variant matches the JDK's, and every frame of a written file verifies") {
+    val rnd = new scala.util.Random(5)
+    (Seq(0, 1, 4092) ++ Seq.fill(40)(rnd.nextInt(4093))).foreach { n =>
+      val d = Array.fill(n)(rnd.nextInt().toByte)
+      assert(HyperBinary.crc32cRaw(d) == rawCrc(d, 0, n), s"length $n")
+    }
 
-    // header pages are self-verifying: last u32 = crc of first 4092
-    // bytes, so the whole 4 KiB page CRCs to zero
-    assert(buf.getInt(0x0ffc) == HyperBinary.crc32cRaw(data, 0x0000, 0x0ffc))
-    assert(buf.getInt(0x1ffc) == HyperBinary.crc32cRaw(data, 0x1000, 0x1ffc))
-    assert(HyperBinary.crc32cRaw(data, 0x0000, 0x1000) == 0)
-    assert(HyperBinary.crc32cRaw(data, 0x1000, 0x2000) == 0)
-
-    // live catalog: frame directly after the '~' covers JSON + '~'
-    var tilde = 0x2000
-    while (data(tilde) != '~') tilde += 1
-    assert(buf.getInt(tilde + 1) == HyperBinary.crc32cRaw(data, 0x2000, tilde + 1))
-
-    // first data block: frame covers the u32 length word + LZ4 stream
-    val uncompLen = buf.getInt(0x2880)
-    val (_, consumed) = Lz4Block.decompress(data, 0x2884, uncompLen)
-    assert(buf.getInt(0x2884 + consumed) ==
-      HyperBinary.crc32cRaw(data, 0x2880, 0x2884 + consumed))
-
-    // genesis: header-block frame at +0x30 covers the block's first 0x30
-    // bytes; the genesis catalog (at +0x40, NO '~') is framed over the
-    // JSON alone
-    var g = 0
-    while (!(data(g) == 'H' && data(g + 1) == 'y' && data(g + 2) == 'p' &&
-      data(g + 3) == 'e' && data(g + 4) == 'r' && data(g + 5) == 'D' &&
-      data(g + 6) == 'B' && data(g + 7) == 0)) g += 1
-    assert(buf.getInt(g + 0x30) == HyperBinary.crc32cRaw(data, g, g + 0x30))
-    val gjLen = 1005 // brace-matched genesis JSON length in the artifact
-    assert(buf.getInt(g + 0x40 + gjLen) ==
-      HyperBinary.crc32cRaw(data, g + 0x40, g + 0x40 + gjLen))
-
-    // and our writer's output satisfies the same page property
-    val df = Seq(("a", 1), ("b", 2)).toDF("s", "n")
+    val df = Seq(("a", 1L), ("b", 2L), (null, 3L)).toDF("s", "n")
+    val small = Seq(("k", 7)).toDF("name", "n")
     val path = Files.createTempDirectory("hyperbin").resolve("crc.hyper").toString
-    HyperBinary.write(path, Seq("t" -> df))
-    val ours = Files.readAllBytes(java.nio.file.Paths.get(path))
-    assert(HyperBinary.crc32cRaw(ours, 0x0000, 0x1000) == 0)
-    assert(HyperBinary.crc32cRaw(ours, 0x1000, 0x2000) == 0)
+    HyperBinary.write(path, Seq("t1" -> df, "t2" -> small))
+    val data = Files.readAllBytes(Paths.get(path))
+    val buf = ByteBuffer.wrap(data).order(ByteOrder.LITTLE_ENDIAN)
+    def frameAt(pos: Int, from: Int) =
+      assert(buf.getInt(pos) == rawCrc(data, from, pos), s"frame at $pos over [$from, $pos)")
+
+    // header pages: the last u32 frames the first 4092 bytes, so the
+    // whole page CRCs to zero
+    for (page <- Seq(0x0000, 0x1000)) {
+      frameAt(page + 0x0ffc, page)
+      assert(rawCrc(data, page, page + 0x1000) == 0)
+    }
+    // live catalog: JSON + '~', then the frame
+    val Seq(liveJson, genesisJson) =
+      HyperBinary.catalogJsons(path).map(_.getBytes(StandardCharsets.UTF_8).length)
+    assert(data(0x2000 + liveJson) == '~')
+    frameAt(0x2000 + liveJson + 1, 0x2000)
+    // one data block per table: [u32 length][LZ4 stream][u32 frame], 16-aligned
+    var pos = buf.getLong(0x48).toInt
+    for (_ <- 0 until 2) {
+      val (_, consumed) = Lz4Block.decompress(data, pos + 4, buf.getInt(pos))
+      frameAt(pos + 4 + consumed, pos)
+      pos = (pos + 4 + consumed + 4 + 15) / 16 * 16
+    }
+    // genesis block right after the data: header frame at +0x30, then the
+    // genesis catalog at +0x40 (no '~') framed over the JSON alone
+    val g = buf.getLong(0x50).toInt
+    assert(g == pos)
+    assert(new String(data, g, 8, StandardCharsets.US_ASCII) == "HyperDB\u0000")
+    frameAt(g + 0x30, g)
+    frameAt(g + 0x40 + genesisJson, g + 0x40)
+    assert(data.length == g + 0x40 + genesisJson + 4)
   }
 
-  test("reference artifact's table-1 data block decodes with our LZ4 codec") {
-    // The strongest row-level check available without the proprietary
-    // directory spec: the artifact's first data block (offset 0x2880,
-    // u32 uncompressed-length prefix) decompresses with the public LZ4
-    // block algorithm into a payload that starts with the table's row
-    // count (6 — matching hyperd.log's COPY rows) and embeds the
-    // table's string values.
-    val data = Files.readAllBytes(java.nio.file.Paths.get(artifact))
-    val buf = java.nio.ByteBuffer.wrap(data).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val uncompLen = buf.getInt(0x2880)
-    val (payload, _) = Lz4Block.decompress(data, 0x2884, uncompLen)
-    assert(java.nio.ByteBuffer.wrap(payload).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .getLong(0) == 6L, "block row count")
-    val text = new String(payload, java.nio.charset.StandardCharsets.ISO_8859_1)
-    assert(text.contains("consumer_complaints") && text.contains("consumer_complaints1"))
-
-    // the further 0x100-strided blocks (HYPER_FORMAT.md §3 item 2)
-    // decode and frame-verify the same way: 0x2980 carries the
-    // product-column dictionary, 0x2a80 the numeric columns
-    for ((off, marker) <- Seq(0x2980 -> Some("Mortgage"), 0x2a80 -> None)) {
-      val ul = buf.getInt(off)
-      val (p, consumed) = Lz4Block.decompress(data, off + 4, ul)
-      assert(java.nio.ByteBuffer.wrap(p).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        .getLong(0) == 6L, s"row count at $off")
-      assert(buf.getInt(off + 4 + consumed) ==
-        HyperBinary.crc32cRaw(data, off, off + 4 + consumed), s"frame at $off")
-      marker.foreach(m => assert(
-        new String(p, java.nio.charset.StandardCharsets.ISO_8859_1).contains(m)))
+  test("type table: LongType is BigInt; an unmapped type fails with its name") {
+    assert(HyperBinary.catalogType(LongType) == """["BigInt", "nullable"]""")
+    val df = Seq((1, Seq(1L, 2L))).toDF("k", "xs")
+    val path = Files.createTempDirectory("hyperbin-type").resolve("t.hyper").toString
+    val err = intercept[IllegalArgumentException] {
+      HyperBinary.write(path, Seq("t" -> df))
     }
+    assert(err.getMessage.contains(ArrayType(LongType).sql))
+  }
+
+  test("a failed export keeps the previous extract readable") {
+    val dir = Files.createTempDirectory("hyper-sink").resolve("out.hyper")
+    val good = Seq(("a", 1L), ("b", 2L)).toDF("k", "n")
+    val sink = new HyperEquivalentSink()
+    sink.write(dir.toString, Seq("t" -> good))
+    val wide = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(new java.math.BigDecimal("1.5"))), 1),
+      StructType(Seq(StructField("x", DecimalType(38, 10)))))
+    intercept[IllegalArgumentException] {
+      sink.write(dir.toString, Seq("t" -> wide))
+    }
+    val (name, _, rows) = HyperBinary.read(dir.resolve("extract.hyper").toString).head
+    assert(name == "t" && rows.map(_.toSeq).toSeq == Seq(Seq("a", 1L), Seq("b", 2L)))
+    assert(Files.list(dir).toArray.map(_.toString).toSeq ==
+      Seq(dir.resolve("extract.hyper").toString))
   }
 }
