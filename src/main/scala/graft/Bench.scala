@@ -4,9 +4,13 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every [[SparkEntry]] query on
+import graft.GateRunner.jsonString
+
+/** Benchmark main: `graft.Bench [gate,gate,…]` runs the listed
+  * [[SparkEntry]] queries (all of them without a list) on
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line
-  * `{"metric","value","unit","queries",...,"sf"}`.
+  * `{"metric","value","unit","queries",...,"sf"}`. A listed run is a
+  * targeted re-measurement and writes no cost hints.
   *
   * Measurement discipline (VERDICT r1 #4):
   *   - median of `SPARK_GRAFT_BENCH_RUNS` (default 3) executions per
@@ -88,7 +92,7 @@ object Bench {
     */
   private val bakedCostHint: Map[String, Double] = Map(
     // round 16 additions + re-measured fixture cuts (measured idle,
-    // sf0.1 local[32], targeted SPARK_GRAFT_BENCH_ONLY run)
+    // sf0.1 local[32], targeted Bench run over a gate list)
     "t41_bpe_train_incremental" -> 4.5,
     "t42_corpus_shuffle" -> 2.3,
     "t43_concat_chunks" -> 1.8,
@@ -336,12 +340,7 @@ object Bench {
   private[graft] def fixturesJson(costs: Map[String, Double]): String =
     costs.toSeq.sortBy { case (n, c) => (-c, n) }
       .map { case (k, v) =>
-        "\"" + k.flatMap {
-          case '"' => "\\\""
-          case '\\' => "\\\\"
-          case c if c < ' ' => " "
-          case c => c.toString
-        } + "\":" + java.lang.String.format(
+        jsonString(k) + ":" + java.lang.String.format(
           java.util.Locale.ROOT, "%.3f", Double.box(v))
       }
       .mkString("{", ",", "}")
@@ -371,13 +370,6 @@ object Bench {
     def elapsedS: Double = (System.nanoTime() - startNanos) / 1e9
     def remainingS: Double = budgetS - elapsedS
 
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
-    }
-
     // Shared mutable state so the shutdown hook can report whatever has
     // completed at the instant of an external kill. All access synchronized
     // on `samples` (the bench loop is single-threaded; the hook races it).
@@ -389,15 +381,9 @@ object Bench {
     // JVM/Spark startup isn't charged to the box), read at emit time —
     // the shutdown hook then still reports the window it actually saw
     @volatile var coAnchor: Option[(Long, Long, Long)] = None // (busy, own, wallNanos)
-    // SPARK_GRAFT_BENCH_ONLY: comma-separated query-name filter for
-    // targeted re-measurement after a plan change (skips cost-hint
-    // writing below so a partial run never clobbers full-suite hints)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    val only = args.headOption // a targeted run: no cost hints written
     var pending: Seq[String] =
-      SparkEntry.queries.keys.toSeq
-        .filter(n => only.forall(_.contains(n)))
-        .sortBy(n => (costHint.getOrElse(n, 1.0), n))
+      GateRunner.select(only).sortBy(n => (costHint.getOrElse(n, 1.0), n))
     val printed = new AtomicBoolean(false)
 
     def emit(expired: Boolean): Unit = if (printed.compareAndSet(false, true)) {
@@ -419,11 +405,11 @@ object Bench {
           k -> ss.sorted.apply(ss.size / 2)
         }
         val ordered = medians.toSeq.sortBy { case (n, c) => (-c, n) }
-        val qs = ordered.map { case (k, v) => "\"" + esc(k) + "\":" + r3(v) }
+        val qs = ordered.map { case (k, v) => jsonString(k) + ":" + r3(v) }
           .mkString("{", ",", "}")
-        val errJson = errors.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
+        val errJson = errors.map { case (k, v) => jsonString(k) + ":" + jsonString(v) }
           .mkString("{", ",", "}")
-        val skipped = pending.map("\"" + esc(_) + "\"").mkString("[", ",", "]")
+        val skipped = pending.map(jsonString).mkString("[", ",", "]")
         val total = if (medians.nonEmpty) medians.values.sum else 0.0
         val ratio =
           if (probes.nonEmpty && probes.values.min > 0) probes.values.max / probes.values.min
@@ -443,11 +429,11 @@ object Bench {
         val quiet =
           if (coFrac >= 0) coFrac < CoTenantQuietBar
           else ratio > 0 && ratio <= 1.5 // no /proc/stat: ratio fallback
-        val contention = (probes.map { case (k, v) => "\"" + esc(k) + "\":" + r3(v) } ++
+        val contention = (probes.map { case (k, v) => jsonString(k) + ":" + r3(v) } ++
           Seq("\"ratio\":" + r3(ratio), "\"cotenant_frac\":" + r3(coFrac),
             "\"quiet\":" + quiet)).mkString("{", ",", "}")
         val slowJson = ordered.take(10)
-          .map { case (k, v) => "\"" + esc(k) + "\":" + r3(v) }
+          .map { case (k, v) => jsonString(k) + ":" + r3(v) }
           .mkString("{", ",", "}")
         // budget_expired means COVERAGE was lost (queries never got a
         // measured sample — skipped outright, OR attempted and failed
@@ -474,7 +460,7 @@ object Bench {
         // not-yet-built dependency includes it (prewarm builds in
         // dependency order, so overlaps are rare in bench runs).
         val fixJson = fixturesJson(Fixtures.buildCosts)
-        println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$runs,"sf":"${esc(sfDir)}","n_queries":${medians.size},"queries":$qs,"errors":$errJson,"skipped":$skipped,"fixtures":$fixJson,"contention":$contention,"budget_expired":$coverageLost,"refine_truncated":$refineCut,"elapsed":${r3(elapsedS)},"slowest":$slowJson}""")
+        println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$runs,"sf":${jsonString(sfDir)},"n_queries":${medians.size},"queries":$qs,"errors":$errJson,"skipped":$skipped,"fixtures":$fixJson,"contention":$contention,"budget_expired":$coverageLost,"refine_truncated":$refineCut,"elapsed":${r3(elapsedS)},"slowest":$slowJson}""")
         System.out.flush()
         // feed the next run's ordering with this run's measured costs
         // (VERDICT r5 #3) — but ONLY from a quiet run: a contended
@@ -549,23 +535,9 @@ object Bench {
       }
     }
 
-    // warm up the session once (JVM/JIT, codegen compiler, parquet footer
-    // caches) so per-query timings measure the queries, not first-job
-    // startup; standard benchmark practice, not counted in the totals
-    try SparkEntry.entry(spark).count() catch {
-      case e: Throwable =>
-        // a broken entry() means the first measured query absorbs JVM
-        // startup — warn loudly instead of silently skipping warmup
-        System.err.println(s"WARN bench warmup failed: $e")
-    }
-    // build the shared gate fixtures up front (Fixtures.prewarm): the
-    // first sample of a fixture-consuming gate must measure its VERB,
-    // not the one-time fixture build — the build cost is warmup, paid
-    // once inside this same budget window
-    try Fixtures.prewarm(spark, sfDir) catch {
-      case e: Throwable =>
-        System.err.println(s"WARN fixture prewarm failed: $e")
-    }
+    // warmup and fixture builds are paid once inside this same budget
+    // window, not counted in the totals
+    GateRunner.warmUp(spark, sfDir)
     // warm the probe path to STEADY STATE before the first point: one
     // throwaway run is not enough — C2 keeps re-optimizing the probe
     // loop for minutes (r13 idle runs measured monotone start > mid >

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GateRunner.jsonString
 import graft.functions.{Curation, Dedup, Graph, Similarity, TextFunctions}
 
 /** Scaling-curve harness: times the banded/LSH operators at several corpus
@@ -697,8 +698,8 @@ object ScaleCurve {
       (label, dir, nDocs, nEmb, counts)
     }
     val json = results.map { case (label, dir, nDocs, nEmb, counts) =>
-      val cs = counts.map { case (n, c) => s""""${esc(n)}":$c""" }.mkString(",")
-      s""""${esc(label)}":{"dir":"${esc(dir)}","docs":$nDocs,"embeddings":$nEmb,"work":{$cs}}"""
+      val cs = counts.map { case (n, c) => s"""${jsonString(n)}:$c""" }.mkString(",")
+      s"""${jsonString(label)}:{"dir":${jsonString(dir)},"docs":$nDocs,"embeddings":$nEmb,"work":{$cs}}"""
     }.mkString("{", ",", "}")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json)
     println(s"[scalecurve] wrote $outFile")
@@ -734,13 +735,6 @@ object ScaleCurve {
     println(s"[scalecurve] wrote ${replicas}x of $srcDir to $outDir")
   }
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   def time(spark: SparkSession, outFile: String,
       dirs: Seq[(String, String)], samples: Int): Unit = {
     // optional comma-separated substring filter, e.g. SPARK_GRAFT_QUERIES=d03
@@ -764,9 +758,9 @@ object ScaleCurve {
     }
     val json = results.map { case (label, dir, nDocs, nEmb, perQuery) =>
       val qs = perQuery.map { case (q, ts) =>
-        s""""${esc(q)}":{"min":${ts.min},"samples":[${ts.mkString(",")}]}"""
+        s"""${jsonString(q)}:{"min":${ts.min},"samples":[${ts.mkString(",")}]}"""
       }.mkString(",")
-      s""""${esc(label)}":{"dir":"${esc(dir)}","docs":$nDocs,"embeddings":$nEmb,"queries":{$qs}}"""
+      s"""${jsonString(label)}:{"dir":${jsonString(dir)},"docs":$nDocs,"embeddings":$nEmb,"queries":{$qs}}"""
     }.mkString("{", ",", "}")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json)
     println(s"[scalecurve] wrote $outFile")

@@ -24,7 +24,7 @@ object SqliteDialect {
   /** Session conf key enabling the pre-`spark.sql` dialect rewrite. */
   val ConfKey = "spark.graft.sqlite.dialect"
 
-  /** Full SQLite→Spark dialect rewrite:
+  /** Full SQLite→Spark dialect rewrite, after [[stripComments]]:
     *   1. double-quoted identifiers → backtick identifiers (SQLite and
     *      the SQL standard quote identifiers with `"`; Spark reads `"`
     *      as a string literal);
@@ -51,7 +51,34 @@ object SqliteDialect {
   def rewrite(sql: String): String =
     transcodeLiterals(
       rewriteStrftime(rewriteGlob(rewriteGroups(rewriteExclude(
-        rewriteDoubleQuoted(sql))))))
+        rewriteDoubleQuoted(stripComments(sql)))))))
+
+  /** SQLite comments (`-- …` to end of line, `/* … */` or to end of
+    * input) → one space each, so a quote in a comment cannot open a span
+    * for the later scans. Steps over '…', "…" and `…` spans (a doubled
+    * quote closes and reopens one); `/*+ … */` hints stay verbatim.
+    */
+  private[pipeline] def stripComments(sql: String): String = {
+    val sb = new StringBuilder
+    var i = 0
+    while (i < sql.length) {
+      val c = sql.charAt(i)
+      if (c == '\'' || c == '"' || c == '`') {
+        val close = sql.indexOf(c.toInt, i + 1)
+        val end = if (close < 0) sql.length else close + 1
+        sb.append(sql.substring(i, end)); i = end
+      } else if (sql.startsWith("--", i)) {
+        val nl = sql.indexOf('\n', i)
+        sb.append(' '); i = if (nl < 0) sql.length else nl
+      } else if (sql.startsWith("/*", i)) {
+        val close = sql.indexOf("*/", i + 2)
+        val end = if (close < 0) sql.length else close + 2
+        if (sql.startsWith("/*+", i)) sb.append(sql.substring(i, end)) else sb.append(' ')
+        i = end
+      } else { sb.append(c); i += 1 }
+    }
+    sb.toString
+  }
 
   /** Genuine frame syntax — a frame bound always ends in PRECEDING /
     * FOLLOWING / CURRENT ROW, so a column that happens to be named
@@ -842,6 +869,7 @@ object SqliteDialect {
   }
 
   /** `"quoted ident"` → `` `quoted ident` `` outside string literals
+    * and backtick identifiers, which pass through unchanged
     * ("" unescapes to ", ` escapes as ``). SQLite's string-literal
     * fallback for unmatched double-quoted names is a documented
     * misfeature; the standard identifier reading is the faithful one.
@@ -850,10 +878,12 @@ object SqliteDialect {
     val sb = new StringBuilder
     var i = 0
     var inStr = false
+    var inTick = false
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (c == '\'') { inStr = !inStr; sb.append(c); i += 1 }
-      else if (c == '"' && !inStr) {
+      if (c == '\'' && !inTick) { inStr = !inStr; sb.append(c); i += 1 }
+      else if (c == '`' && !inStr) { inTick = !inTick; sb.append(c); i += 1 }
+      else if (c == '"' && !inStr && !inTick) {
         val ident = new StringBuilder
         i += 1
         var closed = false
@@ -1036,20 +1066,24 @@ object SqliteDialect {
           throw new IllegalArgumentException(
             s"strftime requires a second argument in: $sql")
         // split the remaining arguments (expr, modifiers…) on top-level
-        // commas, up to the call's closing paren
+        // commas outside literals and backtick identifiers, up to the
+        // call's closing paren
         val parts = scala.collection.mutable.ArrayBuffer.empty[String]
         val cur = new StringBuilder
         var i = comma + 1
         var depth = 0
         var inStr = false
+        var inTick = false
         var end = -1
         while (i < sql.length && end < 0) {
           val c = sql.charAt(i)
-          if (c == '\'') { inStr = !inStr; cur.append(c) }
-          else if (!inStr && c == '(') { depth += 1; cur.append(c) }
-          else if (!inStr && c == ')') {
+          val quoted = inStr || inTick
+          if (c == '\'' && !inTick) { inStr = !inStr; cur.append(c) }
+          else if (c == '`' && !inStr) { inTick = !inTick; cur.append(c) }
+          else if (!quoted && c == '(') { depth += 1; cur.append(c) }
+          else if (!quoted && c == ')') {
             if (depth == 0) end = i else { depth -= 1; cur.append(c) }
-          } else if (!inStr && c == ',' && depth == 0) {
+          } else if (!quoted && c == ',' && depth == 0) {
             parts += cur.toString; cur.clear()
           } else cur.append(c)
           i += 1

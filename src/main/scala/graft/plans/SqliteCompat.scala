@@ -22,8 +22,8 @@ import org.apache.spark.sql.internal.SQLConf
   * value" aggregate — preserving the SQLite semantics (including its
   * nondeterminism) without touching the user's SQL.
   *
-  * Registered via [[GraftSparkExtensions]]:
-  * `SparkSession.builder().withExtensions(new GraftSparkExtensions)` or
+  * Registered via [[GraftSparkExtensions]]: the session builder's
+  * `withExtensions(new GraftSparkExtensions)` or
   * `--conf spark.sql.extensions=graft.plans.GraftSparkExtensions`.
   */
 object SqliteBareColumnRule extends Rule[LogicalPlan] {

@@ -448,6 +448,46 @@ class SqliteDialectSpec extends SparkSpec {
       "SELECT glob FROM t WHERE s LIKE 'a%'")
   }
 
+  test("rewrite: comments are removed before the scans, hints kept") {
+    Seq(("Acme", "Alpha", 1), ("Bolt", "Beta", 2))
+      .toDF("company", "name", "a").createOrReplaceTempView("t")
+    try {
+      val withApostrophe = Seq(
+        "SELECT \"company\" -- the bank's name\nFROM t WHERE name GLOB 'A*'",
+        "SELECT company /* don't */ FROM t WHERE name GLOB 'A*'")
+      withApostrophe.foreach { in =>
+        val out = SqliteDialect.rewrite(in)
+        assert(!out.contains("--") && !out.contains("/*"), out)
+        assert(spark.sql(out).as[String].collect().toSeq === Seq("Acme"))
+      }
+      assert(SqliteDialect.rewrite("SELECT a FROM t -- it's") === "SELECT a FROM t  ")
+      assert(spark.sql(SqliteDialect.rewrite("SELECT a FROM t -- it's"))
+        .as[Int].collect().sorted.toSeq === Seq(1, 2))
+    } finally spark.catalog.dropTempView("t")
+    // comment markers inside the three quote forms are text, not comments
+    val quoted = "SELECT '--x', \"a/*b\", `c--d` FROM u WHERE s = 'it''s /* no */'"
+    assert(SqliteDialect.stripComments(quoted) === quoted)
+    // optimizer hints pass through verbatim
+    assert(SqliteDialect.stripComments("SELECT /*+ BROADCAST(d) */ * FROM f /* x */") ===
+      "SELECT /*+ BROADCAST(d) */ * FROM f  ")
+  }
+
+  test("rewrite: backtick identifiers pass through the quote and strftime scans") {
+    val tick = "SELECT `a\"b` FROM bt"
+    assert(SqliteDialect.rewrite(tick) === tick)
+    Seq(7).toDF("a\"b").createOrReplaceTempView("bt")
+    try assert(spark.sql(SqliteDialect.rewrite(tick)).as[Int].head() === 7)
+    finally spark.catalog.dropTempView("bt")
+
+    val ship = """SELECT strftime('%Y-%m', "ship,date") AS ym FROM st"""
+    val out = SqliteDialect.rewrite(ship)
+    assert(out === "SELECT date_format(`ship,date`, 'yyyy-MM') AS ym FROM st")
+    Seq(java.sql.Timestamp.valueOf("2024-03-05 07:08:09")).toDF("ship,date")
+      .createOrReplaceTempView("st")
+    try assert(spark.sql(out).as[String].head() === "2024-03")
+    finally spark.catalog.dropTempView("st")
+  }
+
   test("strftime directives map to Spark date_format patterns") {
     assert(SqliteDialect.strftimeToSpark("%Y-%m-%d") == "yyyy-MM-dd")
     assert(SqliteDialect.strftimeToSpark("%H:%M:%S") == "HH:mm:ss")

@@ -1,6 +1,8 @@
 #!/bin/bash
-# Local correctness loop: compile, run graft.Verify on $1 (default sf0.01),
-# then duckdb-compare via tools/check.py. Mirrors the driver's gate.
+# Local correctness loop: run graft.Verify on $1 (default sf0.01), then
+# duckdb-compare via tools/check.py. Mirrors the driver's gate.
+# Usage: tools/verify.sh [sfDir] [outDir] [gate,gate,...]
+# The optional list restricts the dump (and oracle_sql.json) to those gates.
 set -e
 cd /root/repo
 SF_DIR=${1:-/root/testdata/sf0.01}
@@ -18,5 +20,5 @@ ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Verify "$SF_DIR" "$OUT_DIR"
+  graft.Verify "$SF_DIR" "$OUT_DIR" ${3:+"$3"}
 python3 /root/repo/tools/check.py "$SF_DIR" "$OUT_DIR"
