@@ -1,7 +1,9 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -57,15 +59,41 @@ class Pipeline(spark: SparkSession, workingDir: String) {
   /** A6 — "table load": register each sheet as a cached temp view under
     * its derived name. Replaces the reference's SQLite materialization
     * (query_iterator.py:101-107) with zero data movement.
+    *
+    * Loading a sheet infers its schema from a sample of its rows on the
+    * driver, and caching it plans the scan, so both run concurrently, on
+    * at most one thread per core; the views are then registered in
+    * order, here (two files may share a base name, and so a view name).
+    * If a load fails, every load is waited for and the sheets that did
+    * load are uncached before its error is rethrown.
     */
-  def registerViews(fsheets: Seq[Fsheet]): Unit =
-    fsheets.foreach { fs =>
-      val df = spark.read.format("excel")
-        .option("sheet", fs.sheet)
-        .load(Paths.get(workingDir, fs.fileName).toString)
-        .cache()
-      df.createOrReplaceTempView(fs.sqlTableName)
+  def registerViews(fsheets: Seq[Fsheet]): Unit = {
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(fsheets.length, Runtime.getRuntime.availableProcessors)))
+    val loads = try fsheets.map { fs =>
+      pool.submit(new Callable[DataFrame] {
+        def call(): DataFrame = {
+          SparkSession.setActiveSession(spark)
+          spark.read.format("excel")
+            .option("sheet", fs.sheet)
+            .load(Paths.get(workingDir, fs.fileName).toString)
+            .cache()
+        }
+      })
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
     }
+    val loaded = loads.map { f =>
+      try Success(f.get()) catch { case e: ExecutionException => Failure(e.getCause) }
+    }
+    loaded.collectFirst { case Failure(e) =>
+      // no view will name the sheets that did load: release their cache entries
+      loaded.foreach(_.foreach(_.unpersist()))
+      throw e
+    }
+    fsheets.zip(loaded).foreach { case (fs, df) => df.get.createOrReplaceTempView(fs.sqlTableName) }
+  }
 
   def dropViews(fsheets: Seq[Fsheet]): Unit =
     fsheets.foreach(fs => spark.catalog.dropTempView(fs.sqlTableName))

@@ -21,41 +21,42 @@ import scala.collection.mutable
   */
 object XlsParser {
 
-  import XlsxParser.Cell
+  import XlsxParser.{CellSink, SheetRows}
 
   def isXls(path: String): Boolean = path.toLowerCase.endsWith(".xls")
-
-  final case class XlsSheet(name: String,
-      rows: IndexedSeq[(Int, IndexedSeq[Cell])])
-
-  /** Parse the workbook: every sheet, materialized. */
-  def read(path: String): IndexedSeq[XlsSheet] = {
-    val g = globals(path)
-    g.bounds.map { case (name, bofPos) => parseSheet(g, name, bofPos) }
-  }
 
   /** Sheet names only — parses just the globals substream (BOUNDSHEET
     * records + SST), no cell data.
     */
   def sheetNames(path: String): Seq[String] = globals(path).bounds.map(_._1)
 
-  /** Callback iteration matching [[XlsxParser.foreachRow]]'s shape.
-    * Parses the globals substream once and then ONLY the requested
-    * sheet's substream (its BOF offset comes from BOUNDSHEET) — other
-    * sheets in the workbook are never decoded, so per-sheet input
-    * partitions and bounded-sample schema inference don't pay for the
-    * whole file.
+  /** One sheet (default: the first), replayed row by row in row order
+    * into the same [[CellSink]] the xlsx decoder feeds. Parses the
+    * globals substream once and then ONLY the requested sheet's
+    * substream (its BOF offset comes from BOUNDSHEET) — other sheets in
+    * the workbook are never decoded, so per-sheet input partitions and
+    * bounded-sample schema inference don't pay for the whole file.
     */
-  def foreachRow(path: String, sheetOpt: Option[String])(
-      f: (Int, Seq[Cell]) => Unit): Unit = {
+  def openSheet(path: String, sheetOpt: Option[String]): SheetRows = {
     val g = globals(path)
-    val (name, bofPos) = sheetOpt match {
+    val bofPos = sheetOpt match {
       case Some(s) => g.bounds.find(_._1 == s).getOrElse(
         throw new IllegalArgumentException(
-          s"excel: sheet '$s' not found in $path; has: ${g.bounds.map(_._1).mkString(", ")}"))
-      case None => g.bounds.head
+          s"excel: sheet '$s' not found in $path; has: ${g.bounds.map(_._1).mkString(", ")}"))._2
+      case None => g.bounds.head._2
     }
-    parseSheet(g, name, bofPos).rows.foreach { case (r, cells) => f(r, cells) }
+    val rows = parseSheet(g, bofPos)
+    new SheetRows {
+      val sharedStrings: Array[String] = g.sst.toArray
+      private val it = rows.iterator
+      def next(sink: CellSink): Boolean = it.hasNext && {
+        val (row, cells) = it.next()
+        sink.row(row)
+        cells.foreach(_._2(sink))
+        true
+      }
+      def close(): Unit = ()
+    }
   }
 
   private def globals(path: String): Globals = {
@@ -398,22 +399,32 @@ object XlsParser {
       xfIfmts.map(isDateFmt).toIndexedSeq, date1904)
   }
 
-  /** One sheet substream, starting at its BOUNDSHEET-recorded BOF. */
-  private def parseSheet(g: Globals, name: String, bofPos: Int): XlsSheet = {
+  /** A decoded cell: its column and how it reports itself to a sink. */
+  private type XlsCell = (Int, CellSink => Unit)
+
+  /** One sheet substream, starting at its BOUNDSHEET-recorded BOF: its
+    * rows in row order, each row's cells in column order.
+    */
+  private def parseSheet(g: Globals, bofPos: Int): IndexedSeq[(Int, IndexedSeq[XlsCell])] = {
     val stream = g.stream
     val sstStrings = g.sst
     locally {
-      val cells = mutable.SortedMap.empty[Int, mutable.ArrayBuffer[Cell]]
-      def add(row: Int, c: Cell): Unit =
-        cells.getOrElseUpdate(row, mutable.ArrayBuffer.empty) += c
+      val cells = mutable.SortedMap.empty[Int, mutable.ArrayBuffer[XlsCell]]
+      def add(row: Int, col: Int, emit: CellSink => Unit): Unit =
+        cells.getOrElseUpdate(row, mutable.ArrayBuffer.empty) += ((col, emit))
+      def text(row: Int, col: Int, s: String): Unit = add(row, col, _.text(col, s))
+      def bool(row: Int, col: Int, b: Boolean): Unit = add(row, col, _.bool(col, b))
       // a numeric cell whose XF carries a date format is a DATE — the
       // same style-based storage as xlsx (serial + format), so legacy
       // workbooks get the identical pandas-datetime64 parity
-      def numCell(col: Int, ixfe: Int, d: Double): Cell =
-        if (ixfe >= 0 && ixfe < g.xfIsDate.length && g.xfIsDate(ixfe))
-          Cell(col, XlsxParser.serialToDateTimeString(d, g.date1904),
-            isNumeric = false, isDate = true)
-        else Cell(col, numToString(d), isNumeric = true)
+      def num(row: Int, col: Int, ixfe: Int, d: Double): Unit =
+        if (ixfe >= 0 && ixfe < g.xfIsDate.length && g.xfIsDate(ixfe)) {
+          val ms = XlsxParser.serialToMillis(d, g.date1904)
+          add(row, col, _.date(col, ms))
+        } else {
+          val t = numToString(d).toCharArray
+          add(row, col, _.number(col, t, 0, t.length))
+        }
       val rit = records(stream, bofPos).buffered
       var inSheet = true
       if (rit.hasNext && rit.head.id == Rec.Bof) rit.next()
@@ -424,36 +435,32 @@ object XlsParser {
           case Rec.Bof => inSheet = false // next substream began
           case Rec.LabelSst =>
             val isst = i32(r.data, 6)
-            val v = if (isst >= 0 && isst < sstStrings.length) sstStrings(isst) else ""
-            add(u16(r.data, 0), Cell(u16(r.data, 2), v, isNumeric = false))
+            val col = u16(r.data, 2)
+            if (isst >= 0 && isst < sstStrings.length) add(u16(r.data, 0), col, _.shared(col, isst))
+            else text(u16(r.data, 0), col, "")
           case Rec.Label =>
             val cch = u16(r.data, 6)
             val flags = r.data(8) & 0xFF
-            add(u16(r.data, 0),
-              Cell(u16(r.data, 2), readInlineString(r.data, 9, cch, flags),
-                isNumeric = false))
+            text(u16(r.data, 0), u16(r.data, 2), readInlineString(r.data, 9, cch, flags))
           case Rec.Number =>
-            add(u16(r.data, 0),
-              numCell(u16(r.data, 2), u16(r.data, 4), f64(r.data, 6)))
+            num(u16(r.data, 0), u16(r.data, 2), u16(r.data, 4), f64(r.data, 6))
           case Rec.Rk =>
-            add(u16(r.data, 0),
-              numCell(u16(r.data, 2), u16(r.data, 4), decodeRk(i32(r.data, 6))))
+            num(u16(r.data, 0), u16(r.data, 2), u16(r.data, 4), decodeRk(i32(r.data, 6)))
           case Rec.MulRk =>
             val row = u16(r.data, 0)
             val colFirst = u16(r.data, 2)
             val n = (r.data.length - 6) / 6
             var k = 0
             while (k < n) {
-              add(row, numCell(colFirst + k, u16(r.data, 4 + k * 6),
-                decodeRk(i32(r.data, 4 + k * 6 + 2))))
+              num(row, colFirst + k, u16(r.data, 4 + k * 6),
+                decodeRk(i32(r.data, 4 + k * 6 + 2)))
               k += 1
             }
           case Rec.BoolErr =>
             val isErr = (r.data(7) & 0xFF) != 0
-            val v =
-              if (isErr) "" // error cells read as empty (pandas: NaN)
-              else if ((r.data(6) & 0xFF) != 0) "true" else "false"
-            add(u16(r.data, 0), Cell(u16(r.data, 2), v, isNumeric = false))
+            // error cells read as empty (pandas: NaN)
+            if (isErr) text(u16(r.data, 0), u16(r.data, 2), "")
+            else bool(u16(r.data, 0), u16(r.data, 2), (r.data(6) & 0xFF) != 0)
           case Rec.Formula =>
             val row = u16(r.data, 0)
             val colIdx = u16(r.data, 2)
@@ -470,29 +477,25 @@ object XlsParser {
                     val sr = rit.next()
                     val cch = u16(sr.data, 0)
                     val flags = sr.data(2) & 0xFF
-                    add(row, Cell(colIdx,
-                      readInlineString(sr.data, 3, cch, flags), isNumeric = false))
+                    text(row, colIdx, readInlineString(sr.data, 3, cch, flags))
                   } else {
                     // missing STRING record: empty string per spec, never
                     // a silently dropped cell
-                    add(row, Cell(colIdx, "", isNumeric = false))
+                    text(row, colIdx, "")
                   }
                 case 1 => // boolean result
-                  add(row, Cell(colIdx,
-                    if ((r.data(8) & 0xFF) != 0) "true" else "false",
-                    isNumeric = false))
+                  bool(row, colIdx, (r.data(8) & 0xFF) != 0)
                 case _ => () // error / empty result
               }
             } else {
-              add(row, numCell(colIdx, u16(r.data, 4), f64(r.data, 6)))
+              num(row, colIdx, u16(r.data, 4), f64(r.data, 6))
             }
           case _ => ()
         }
       }
-      XlsSheet(name,
-        cells.iterator.map { case (row, cs) =>
-          (row, cs.sortBy(_.col).toIndexedSeq)
-        }.toIndexedSeq)
+      cells.iterator.map { case (row, cs) =>
+        (row, cs.sortBy(_._1).toIndexedSeq)
+      }.toIndexedSeq
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources.excel
 
-import java.io.{BufferedOutputStream, FileOutputStream}
+import java.io.BufferedOutputStream
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import org.apache.spark.sql.DataFrame
@@ -52,13 +53,31 @@ object XlsxWriter {
     * format's own sheet limit (1,048,576 rows incl. the header), past
     * which the workbook would be invalid anyway — rows stream through
     * `toLocalIterator`, so the cap guards runtime and output sanity, not
-    * driver memory. Exceeding it raises with the file partially written
-    * (and then closed), pointing large exports at parquet instead.
+    * driver memory. Exceeding it raises, pointing large exports at
+    * parquet instead.
+    *
+    * The workbook is built in a temp file next to `path` (its name ends
+    * in `.tmp`, so directory listings of workbooks skip it) and renamed
+    * into place: a failed write — the row cap, a query that throws —
+    * leaves the previous file at `path` as it was.
     */
   def write(path: String, sheets: Seq[(String, DataFrame)],
       sharedStrings: Boolean = true, maxRows: Int = 1048575): Unit = {
     require(maxRows > 0, s"XlsxWriter: maxRows must be positive (got $maxRows)")
-    val zos = new ZipOutputStream(new BufferedOutputStream(new FileOutputStream(path)))
+    val target = Paths.get(path).toAbsolutePath
+    // created by the writer itself, not Files.createTempFile, so the
+    // workbook gets the usual file mode rather than owner-only
+    val tmp = target.resolveSibling(s".${target.getFileName}.${java.util.UUID.randomUUID}.tmp")
+    try {
+      writeZip(tmp, sheets, sharedStrings, maxRows)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
+  }
+
+  private def writeZip(file: Path, sheets: Seq[(String, DataFrame)],
+      sharedStrings: Boolean, maxRows: Int): Unit = {
+    val zos = new ZipOutputStream(new BufferedOutputStream(
+      Files.newOutputStream(file, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)))
     def entry(name: String, content: String): Unit = {
       zos.putNextEntry(new ZipEntry(name))
       zos.write(content.getBytes("UTF-8"))

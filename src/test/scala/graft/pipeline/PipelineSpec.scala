@@ -77,6 +77,38 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("registerViews: concurrent loads register each sheet with its own schema") {
+    val dir = Files.createTempDirectory("pipeline-views").toString
+    val books = (0 until 6).map { i =>
+      val df = spark.range(0, i + 1).selectExpr("id", s"CAST(id * $i AS DOUBLE) AS x$i")
+      XlsxWriter.write(s"$dir/book_$i.xlsx", Seq("Sheet1" -> df))
+      Fsheet(s"book_$i.xlsx", "Sheet1")
+    }
+    val p = new Pipeline(spark, dir)
+    // CacheManager.numCachedEntries is private[sql]; a public method in bytecode
+    val cache = spark.sharedState.cacheManager
+    def cached: Int = cache.getClass.getMethod("numCachedEntries").invoke(cache).asInstanceOf[Int]
+    val entries = cached
+    p.registerViews(books)
+    try {
+      assert(cached == entries + books.length)
+      books.zipWithIndex.foreach { case (fs, i) =>
+        val v = spark.table(fs.sqlTableName)
+        assert(v.columns.toSeq == Seq("id", s"x$i"))
+        assert(v.count() == i + 1)
+      }
+    } finally p.dropViews(books)
+    assert(cached == entries)
+    // a failed load surfaces as itself, naming the sheet, and leaves
+    // neither a view nor a cache entry for the sheets that did load
+    val e = intercept[IllegalArgumentException] {
+      p.registerViews(Fsheet("book_0.xlsx", "Missing") +: books)
+    }
+    assert(e.getMessage.contains("Missing"))
+    assert(!books.exists(fs => spark.catalog.tableExists(fs.sqlTableName)))
+    assert(cached == entries)
+  }
+
   test("sheet-ref rewrite: documented contract + punctuation edge (Q3)") {
     val q = Query("t", "SELECT * FROM Sheet1.sheet WHERE x=1", pivotTable = false)
     assert(q.formatQuery("consumer_complaints.xlsx") ==

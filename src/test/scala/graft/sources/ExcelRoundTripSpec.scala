@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
@@ -30,6 +31,28 @@ class ExcelRoundTripSpec extends SparkSpec {
     val ok = tmp("at-cap.xlsx")
     XlsxWriter.write(ok, Seq("s" -> df), maxRows = 20)
     assert(spark.read.format("excel").load(ok).count() == 20)
+  }
+
+  test("a failed export keeps the previous workbook readable") {
+    val path = tmp("export.xlsx")
+    val dir = java.nio.file.Paths.get(path).getParent
+    XlsxWriter.write(path, Seq("s" -> spark.range(0, 5).toDF("id")))
+    // the row cap, and a query that throws part-way through its rows
+    intercept[IllegalArgumentException] {
+      XlsxWriter.write(path, Seq("s" -> spark.range(0, 50).toDF("id")), maxRows = 10)
+    }
+    intercept[Exception] {
+      XlsxWriter.write(path, Seq("s" -> spark.range(0, 50).toDF("id")
+        .selectExpr("CASE WHEN id < 40 THEN id ELSE raise_error('boom') END AS id")))
+    }
+    assert(spark.read.format("excel").load(path).orderBy("id").collect().map(_.getLong(0)).toSeq
+      == (0L until 5L))
+    // no temp file is left behind, and none would be listed as a workbook
+    assert(Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq == Seq("export.xlsx"))
+    // the renamed workbook has the file mode any new file there gets
+    val plain = Files.write(dir.resolve("plain.bin"), Array.emptyByteArray)
+    assert(Files.getPosixFilePermissions(java.nio.file.Paths.get(path)) ==
+      Files.getPosixFilePermissions(plain))
   }
 
   test("typed round trip: long / double / string / blanks / mixed") {

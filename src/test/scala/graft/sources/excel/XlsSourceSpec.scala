@@ -2,6 +2,7 @@ package graft.sources.excel
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Path}
+import scala.collection.mutable
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -246,6 +247,30 @@ class XlsSourceSpec extends SparkSpec {
   private val sst = IndexedSeq("name", "qty", "price", "flag",
     "alpha", "beta-split-across-continue", "k")
 
+  private final case class Sheet(name: String, rows: Map[Int, Seq[String]])
+
+  /** Every sheet of an .xls as decoded by [[XlsParser.openSheet]]: its
+    * rows as cell texts, in column order. */
+  private def read(f: Path): Seq[Sheet] = {
+    val path = f.toString
+    XlsParser.sheetNames(path).map { name =>
+      val sheet = XlsParser.openSheet(path, Some(name))
+      val rows = mutable.Map.empty[Int, mutable.ArrayBuffer[String]]
+      var cells = mutable.ArrayBuffer.empty[String]
+      val texts = new XlsxParser.CellSink {
+        def row(index: Int): Unit = { cells = mutable.ArrayBuffer.empty; rows(index) = cells }
+        def number(col: Int, chars: Array[Char], off: Int, len: Int): Unit =
+          cells += new String(chars, off, len)
+        def date(col: Int, epochMs: Long): Unit = cells += XlsxParser.dateTimeText(epochMs)
+        def shared(col: Int, idx: Int): Unit = cells += sheet.sharedStrings(idx)
+        def text(col: Int, s: String): Unit = cells += s
+        def bool(col: Int, b: Boolean): Unit = cells += b.toString
+      }
+      try while (sheet.next(texts)) () finally sheet.close()
+      Sheet(name, rows.map { case (r, cs) => r -> cs.toSeq }.toMap)
+    }
+  }
+
   private def fixture(): Path = {
     val dir = Files.createTempDirectory("xls-fixture")
     val f = dir.resolve("legacy_book.xls")
@@ -255,15 +280,15 @@ class XlsSourceSpec extends SparkSpec {
 
   test("XlsParser: sheets, SST continue split, RK/MULRK/NUMBER/BOOLERR decode") {
     val f = fixture()
-    val sheets = XlsParser.read(f.toString)
+    val sheets = read(f)
     assert(sheets.map(_.name) == Seq("Data", "Other"))
     val rows = sheets.head.rows.toMap
-    assert(rows(0).map(_.value) == Seq("name", "qty", "price", "flag"))
-    assert(rows(1).map(_.value) == Seq("alpha", "42", "2.5", "true"))
+    assert(rows(0) == Seq("name", "qty", "price", "flag"))
+    assert(rows(1) == Seq("alpha", "42", "2.5", "true"))
     // the split string reassembles exactly; MULRK decodes both forms
-    assert(rows(2).map(_.value) ==
+    assert(rows(2) ==
       Seq("beta-split-across-continue", "7", "1.25", "false"))
-    assert(sheets(1).rows.toMap.apply(1).map(_.value) == Seq("-5"))
+    assert(sheets(1).rows.toMap.apply(1) == Seq("-5"))
   }
 
   test("SST unicode strings: UTF-16 segments + mixed-compression CONTINUE split") {
@@ -310,19 +335,19 @@ class XlsSourceSpec extends SparkSpec {
     val dir = Files.createTempDirectory("xls-uni")
     val f = dir.resolve("uni.xls")
     Files.write(f, cfb(wb()))
-    val rows = XlsParser.read(f.toString).head.rows.toMap
-    assert(rows(0).head.value == "title")
-    assert(rows(1).head.value == uni)
-    assert(rows(2).head.value == split)
+    val rows = read(f).head.rows.toMap
+    assert(rows(0).head == "title")
+    assert(rows(1).head == uni)
+    assert(rows(2).head == split)
   }
 
   test("mini-stream container: small workbooks chained through the mini FAT") {
     val dir = Files.createTempDirectory("xls-mini")
     val f = dir.resolve("mini_book.xls")
     Files.write(f, cfbMini(workbookStream(sst)))
-    val sheets = XlsParser.read(f.toString)
+    val sheets = read(f)
     assert(sheets.map(_.name) == Seq("Data", "Other"))
-    assert(sheets.head.rows.toMap.apply(1).map(_.value) ==
+    assert(sheets.head.rows.toMap.apply(1) ==
       Seq("alpha", "42", "2.5", "true"))
   }
 
