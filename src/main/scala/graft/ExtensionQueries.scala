@@ -178,10 +178,11 @@ object ExtensionQueries {
           * sqrt(CAST(${dotQ(b, b)} AS DOUBLE)))"""
 
   /** DuckDB LSH bucket expression for hyperplane table `tableIdx` of a
-    * multi-table configuration — the same deterministic sign literals as
-    * `Similarity.lshBucketsNative` with planeOffset = tableIdx·planes,
-    * so both engines compute identical bucket ids (the e02 single-table
-    * precedent, generalized).
+    * multi-table configuration — the same deterministic sign literals
+    * (plane rows `[tableIdx·planes, (tableIdx+1)·planes)` of
+    * `Similarity.planeSigns`) as element `tableIdx` of the
+    * `LshBuckets` kernel, so both engines compute identical bucket ids
+    * (the e02 single-table precedent, generalized).
     */
   private def bucketSql(embCol: String, planes: Int, dims: Int,
       tableIdx: Int): String = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GateRunner.jsonString
 import graft.functions.{Curation, Dedup, Graph, Similarity, TextFunctions}
+import graft.functions.expressions.LshBuckets
 
 /** Scaling-curve harness: times the banded/LSH operators at several corpus
   * sizes so SCALE.md's "near-linear" claims are measured, not argued.
@@ -408,11 +409,10 @@ object ScaleCurve {
   }
 
   /** (table, bucket) rows for the multi-table hyperplane LSH paths —
-    * same buckets as `Similarity.bucketRows` (via lshBucketsNative). */
+    * same buckets as `Similarity.bucketRows` (the `LshBuckets` kernel). */
   private def tableBuckets(e: DataFrame, planes: Int, dims: Int,
       tables: Int): DataFrame =
-    e.select(posexplode(array((0 until tables).map(t =>
-        Similarity.lshBucketsNative(col("embedding"), planes, dims, t * planes)): _*))
+    e.select(posexplode(LshBuckets(col("embedding"), planes, dims, tables))
       .as(Seq("table", "bucket")))
 
   val work: Seq[(String, (SparkSession, String) => Long)] = Seq(

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.expressions.LshBuckets
+
 /** Similarity search over embedding columns (`array<float>`).
   *
   * All scores use *quantized* arithmetic: each component is scaled to an
@@ -129,42 +131,21 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Bucket id via the native [[graft.functions.expressions.QuantizedDot]]
-    * expression against ±1 plane-sign vectors: the signs quantize to
-    * ±1000 (a positive scalar factor), so
-    * `sign(QuantizedDot(x, s)) = sign(Σ quantize(x)·s)` — bit-identical
-    * buckets to [[lshBuckets]]. Two wins over the HOF formulation:
-    * the per-plane dot is one fused codegen loop (quantization included,
-    * no intermediate array), and — load-bearing for the candidate
-    * self-joins — the projection CANONICALIZES: lambda-bearing plans
-    * (`NamedLambdaVariable` allocates fresh ids per analysis) never
-    * compare equal, so a self-join over HOF buckets re-executes its
-    * whole input on both sides instead of reusing the first side's
-    * shuffle exchange.
-    */
-  def lshBucketsNative(vec: Column, planes: Int, dims: Int,
-      planeOffset: Int = 0): Column = {
-    import graft.functions.expressions.QuantizedDot
-    val all = planeSigns(planeOffset + planes, dims)
-    (0 until planes).map { p =>
-      val signs = array(all(planeOffset + p).map(v => lit(v.toFloat)): _*)
-      when(QuantizedDot(vec, signs) > 0, lit(1L << p)).otherwise(0L)
-    }.reduce(_ + _)
-  }
-
   /** (vec_id, embedding, buckets, t, bucket) rows: the full `tables`-long
-    * bucket array computed once per vector via [[lshBucketsNative]]
-    * (fused codegen dots, no HOF lambdas — see there for why that is
-    * required, not just faster), then one posexplode. Every multi-table
+    * bucket array computed once per vector by the fused
+    * [[graft.functions.expressions.LshBuckets]] kernel (bit-identical
+    * to [[lshBuckets]]), then one posexplode. Every multi-table
     * candidate join shares this single projection instead of recomputing
-    * it per table branch.
+    * it per table branch. The kernel is a plain expression, not a HOF:
+    * lambda-bearing plans (`NamedLambdaVariable` allocates fresh ids per
+    * analysis) never canonicalize equal, so a self-join over HOF buckets
+    * would re-execute its whole input on both sides instead of reusing
+    * the first side's shuffle exchange.
     */
   private def bucketRows(emb: DataFrame, planes: Int, dims: Int,
       tables: Int): DataFrame =
     emb.select(col("vec_id"), col("embedding"),
-        array((0 until tables).map(t =>
-          lshBucketsNative(col("embedding"), planes, dims, t * planes)): _*)
-          .as("buckets"))
+        LshBuckets(col("embedding"), planes, dims, tables).as("buckets"))
       .select(col("vec_id"), col("embedding"), col("buckets"),
         posexplode(col("buckets")).as(Seq("t", "bucket")))
 
@@ -2228,22 +2209,5 @@ object Similarity {
       .withColumn("rank", row_number().over(wExact))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos"))
-  }
-
-  /** Bucket id from an ALREADY-quantized vector column — callers that
-    * compute many buckets should materialize the quantized array first
-    * (see [[cosineNearDupPairs]]) so each plane's aggregate reads a
-    * column, not a re-evaluated transform.
-    */
-  def lshBucketsFromQuantized(q: Column, planes: Int, dims: Int,
-      planeOffset: Int): Column = {
-    val all = planeSigns(planeOffset + planes, dims)
-    val bits = (0 until planes).map { p =>
-      val dot = aggregate(
-        zip_with(q, array(all(planeOffset + p).map(lit): _*), (x, s) => x * s),
-        lit(0L), (acc, v) => acc + v)
-      when(dot > 0, lit(1L << p)).otherwise(0L)
-    }
-    bits.reduce(_ + _)
   }
 }

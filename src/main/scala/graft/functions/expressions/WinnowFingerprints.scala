@@ -30,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * window minima fold over a primitive long array. Codegen emits one
   * static call, so the expression stays inside whole-stage codegen
   * and canonicalizes (no lambda ids — exchange reuse survives, see
-  * `Similarity.lshBucketsNative` for why that matters in self-joins).
+  * `Similarity.bucketRows` for why that matters in self-joins).
   */
 case class WinnowFingerprints(child: Expression, k: Int, w: Int)
     extends UnaryExpression {

@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
@@ -467,14 +467,7 @@ object HyperBinary {
     // patched last so they cover every other patched field
     patch.putInt(0x0ffc, crc32cRaw(bytes, 0x0000, 0x0ffc))
     patch.putInt(0x1ffc, crc32cRaw(bytes, 0x1000, 0x1ffc))
-    // build the file next to `path` and rename it into place, so a
-    // reader never sees a partial file and a failed write keeps the old one
-    val target = Paths.get(path).toAbsolutePath
-    val tmp = Files.createTempFile(target.getParent, s".${target.getFileName}.", ".tmp")
-    try {
-      Files.write(tmp, bytes)
-      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    } finally Files.deleteIfExists(tmp)
+    AtomicFile.write(Paths.get(path).toAbsolutePath)(_.write(bytes))
   }
 
   /** Every embedded catalog JSON in the file, in offset order (the live

@@ -178,15 +178,37 @@ private[excel] object ExcelSchema {
     } finally sheet.close()
     val names = sample.names
     while (names.length < sample.width) names += ""
-    val fields = names.zipWithIndex.map { case (n, i) =>
+    val unique = uniqueNames(names.zipWithIndex.map { case (n, i) =>
+      if (n.nonEmpty) n else s"_c$i" }.toSeq)
+    val fields = unique.zipWithIndex.map { case (n, i) =>
       val dt: DataType =
         if (!inferTypes || i >= sample.seen.length || !sample.seen(i)) StringType
         else if (sample.allDates(i)) TimestampType
         else if (sample.allNumeric(i)) if (sample.allIntegral(i)) LongType else DoubleType
         else StringType
-      StructField(if (n.nonEmpty) n else s"_c$i", dt, nullable = true)
+      StructField(n, dt, nullable = true)
     }
-    StructType(fields.toSeq)
+    StructType(fields)
+  }
+
+  /** Repeated header names made unique the way pandas does: the second
+    * `x` becomes `x.1`, the third `x.2`, skipping a name an earlier
+    * column already holds. The scan maps pruned columns back by name,
+    * so a schema with two equal names could not be read.
+    */
+  private def uniqueNames(names: Seq[String]): Seq[String] = {
+    val counts = mutable.HashMap.empty[String, Int].withDefaultValue(0)
+    names.map { name =>
+      var n = name
+      var count = counts(n)
+      while (count > 0) {
+        counts(n) = count + 1
+        n = s"$n.$count"
+        count = counts(n)
+      }
+      counts(n) = count + 1
+      n
+    }
   }
 
   /** What inference learns from the sampled rows: header names, and per

@@ -1,11 +1,13 @@
 package graft.sources.excel
 
-import java.io.BufferedOutputStream
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.io.OutputStream
+import java.nio.file.Paths
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
+
+import graft.sinks.AtomicFile
 
 /** Minimal xlsx writer: one workbook, N sheets, header row.
   *
@@ -64,20 +66,13 @@ object XlsxWriter {
   def write(path: String, sheets: Seq[(String, DataFrame)],
       sharedStrings: Boolean = true, maxRows: Int = 1048575): Unit = {
     require(maxRows > 0, s"XlsxWriter: maxRows must be positive (got $maxRows)")
-    val target = Paths.get(path).toAbsolutePath
-    // created by the writer itself, not Files.createTempFile, so the
-    // workbook gets the usual file mode rather than owner-only
-    val tmp = target.resolveSibling(s".${target.getFileName}.${java.util.UUID.randomUUID}.tmp")
-    try {
-      writeZip(tmp, sheets, sharedStrings, maxRows)
-      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    } finally Files.deleteIfExists(tmp)
+    AtomicFile.write(Paths.get(path).toAbsolutePath)(
+      writeZip(_, sheets, sharedStrings, maxRows))
   }
 
-  private def writeZip(file: Path, sheets: Seq[(String, DataFrame)],
+  private def writeZip(out: OutputStream, sheets: Seq[(String, DataFrame)],
       sharedStrings: Boolean, maxRows: Int): Unit = {
-    val zos = new ZipOutputStream(new BufferedOutputStream(
-      Files.newOutputStream(file, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)))
+    val zos = new ZipOutputStream(out)
     def entry(name: String, content: String): Unit = {
       zos.putNextEntry(new ZipEntry(name))
       zos.write(content.getBytes("UTF-8"))

@@ -255,6 +255,14 @@ class HyperBinarySpec extends SparkSpec {
     assert(err.getMessage.contains(ArrayType(LongType).sql))
   }
 
+  test("the extract gets the file mode of any new file in its directory") {
+    val dir = Files.createTempDirectory("hyperbin-mode")
+    val path = dir.resolve("mode.hyper")
+    HyperBinary.write(path.toString, Seq("t" -> Seq(1L, 2L).toDF("n")))
+    val plain = Files.write(dir.resolve("plain.bin"), Array.emptyByteArray)
+    assert(Files.getPosixFilePermissions(path) == Files.getPosixFilePermissions(plain))
+  }
+
   test("a failed export keeps the previous extract readable") {
     val dir = Files.createTempDirectory("hyper-sink").resolve("out.hyper")
     val good = Seq(("a", 1L), ("b", 2L)).toDF("k", "n")

@@ -55,6 +55,24 @@ class ExcelRoundTripSpec extends SparkSpec {
       Files.getPosixFilePermissions(plain))
   }
 
+  test("repeated header names read back made unique as pandas does") {
+    val path = tmp("dup.xlsx")
+    XlsxWriter.write(path, Seq("s" -> spark.range(3).selectExpr("id AS x", "id * 10 AS x")))
+    val back = spark.read.format("excel").load(path)
+    assert(back.columns.toSeq == Seq("x", "x.1"))
+    assert(back.orderBy("x").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((0L, 0L), (1L, 10L), (2L, 20L)))
+    // a pruned scan maps the renamed column back to its own cells
+    assert(back.select("`x.1`").collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 10L, 20L))
+    // a generated name skips one the header already holds
+    val taken = tmp("taken.xlsx")
+    XlsxWriter.write(taken, Seq("s" -> spark.range(1)
+      .selectExpr("id AS x", "id + 1 AS `x.1`", "id + 2 AS x")))
+    val t = spark.read.format("excel").load(taken)
+    assert(t.columns.toSeq == Seq("x", "x.1", "x.1.1"))
+    assert(t.select("`x.1.1`", "`x.1`").head() == Row(2L, 1L))
+  }
+
   test("typed round trip: long / double / string / blanks / mixed") {
     val df = Seq(
       (1L, 1.5, "alpha", Some("x"), "2013-08-30"),
