@@ -532,9 +532,10 @@ object SparkEntry {
         .orderBy(col("l_returnflag"))
     }),
 
-    // Raw SQLite-dialect SQL through the integrated rewrite
-    // (pipeline.SqliteDialect.rewrite): GLOB → LIKE, strftime →
-    // date_format (argument swap), double-quoted identifier → backticks.
+    // Raw SQLite-dialect SQL through the dialect's entry point
+    // (pipeline.SqliteDialect.sql): GLOB → LIKE, strftime → the session
+    // function building date_format (argument swap), and the
+    // double-quoted identifier read by Spark's own parser.
     // This is the reference's pass-through contract end to end
     // (reference query.py:13-27 / query_iterator.py:131): the string
     // below is exactly what a SQLite user would have written.
@@ -546,7 +547,7 @@ object SparkEntry {
         FROM orders
         WHERE o_orderpriority GLOB '*URGENT*' AND o_orderkey <= 2000
         ORDER BY o_orderkey"""
-      s.sql(pipeline.SqliteDialect.rewrite(sqliteSql))
+      pipeline.SqliteDialect.sql(s, sqliteSql)
     }),
 
     // SQLite GROUPS window frames through the dialect rewrite: numeric
@@ -569,7 +570,7 @@ object SparkEntry {
                               GROUPS UNBOUNDED PRECEDING) AS wcum
         FROM orders WHERE o_orderkey <= 4000
         ORDER BY o_custkey, o_orderkey"""
-      s.sql(pipeline.SqliteDialect.rewrite(sqliteSql))
+      pipeline.SqliteDialect.sql(s, sqliteSql)
     }),
 
     // Round-7 dialect residuals, both formerly documented limits:
@@ -586,7 +587,7 @@ object SparkEntry {
         FROM orders
         WHERE o_orderpriority GLOB '[12]-*' AND o_orderkey <= 3000
         ORDER BY o_orderkey"""
-      s.sql(pipeline.SqliteDialect.rewrite(sqliteSql))
+      pipeline.SqliteDialect.sql(s, sqliteSql)
     }),
 
     // Round-9 dialect residual (formerly a documented "genuinely
@@ -610,7 +611,7 @@ object SparkEntry {
                  ORDER BY strftime('%Y', o_orderdate) EXCLUDE GROUP) AS c_grp
         FROM orders WHERE o_orderkey <= 4000
         ORDER BY o_custkey, o_orderkey"""
-      s.sql(pipeline.SqliteDialect.rewrite(sqliteSql))
+      pipeline.SqliteDialect.sql(s, sqliteSql)
     }),
 
     // Round-10 widening of the EXCLUDE emulation: MIN/MAX under
@@ -631,7 +632,7 @@ object SparkEntry {
                  ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING EXCLUDE CURRENT ROW) AS mn_fwd
         FROM orders WHERE o_orderkey <= 4000
         ORDER BY o_custkey, o_orderkey"""
-      s.sql(pipeline.SqliteDialect.rewrite(sqliteSql))
+      pipeline.SqliteDialect.sql(s, sqliteSql)
     }),
 
     // Round-11 widening of the EXCLUDE emulation (VERDICT r10 "What's
@@ -655,7 +656,7 @@ object SparkEntry {
                  ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING EXCLUDE CURRENT ROW) AS md_fwd
         FROM orders WHERE o_orderkey <= 4000
         ORDER BY o_custkey, o_orderkey"""
-      s.sql(pipeline.SqliteDialect.rewrite(sqliteSql))
+      pipeline.SqliteDialect.sql(s, sqliteSql)
     }),
 
     // Native recursive CTE (Spark 4.1 WITH RECURSIVE — formerly listed

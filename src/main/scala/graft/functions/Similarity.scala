@@ -134,20 +134,23 @@ object Similarity {
   /** (vec_id, embedding, buckets, t, bucket) rows: the full `tables`-long
     * bucket array computed once per vector by the fused
     * [[graft.functions.expressions.LshBuckets]] kernel (bit-identical
-    * to [[lshBuckets]]), then one posexplode. Every multi-table
-    * candidate join shares this single projection instead of recomputing
-    * it per table branch. The kernel is a plain expression, not a HOF:
-    * lambda-bearing plans (`NamedLambdaVariable` allocates fresh ids per
-    * analysis) never canonicalize equal, so a self-join over HOF buckets
-    * would re-execute its whole input on both sides instead of reusing
-    * the first side's shuffle exchange.
+    * to [[lshBuckets]]), then one posexplode_outer. The array is never
+    * empty; the outer form only keeps Spark's InferFiltersFromGenerate
+    * from adding a `size(buckets) > 0` filter, which is pushed below the
+    * projection and would evaluate the kernel a second time per vector.
+    * Every multi-table candidate join shares this single projection
+    * instead of recomputing it per table branch. The kernel is a plain
+    * expression, not a HOF: lambda-bearing plans (`NamedLambdaVariable`
+    * allocates fresh ids per analysis) never canonicalize equal, so a
+    * self-join over HOF buckets would re-execute its whole input on both
+    * sides instead of reusing the first side's shuffle exchange.
     */
   private def bucketRows(emb: DataFrame, planes: Int, dims: Int,
       tables: Int): DataFrame =
     emb.select(col("vec_id"), col("embedding"),
         LshBuckets(col("embedding"), planes, dims, tables).as("buckets"))
       .select(col("vec_id"), col("embedding"), col("buckets"),
-        posexplode(col("buckets")).as(Seq("t", "bucket")))
+        posexplode_outer(col("buckets")).as(Seq("t", "bucket")))
 
   /** First-matching-table dedup predicate over two bucket arrays joined
     * at table `t`: true iff no lower-indexed table already collided, so

@@ -36,16 +36,6 @@ final case class Query(name: String, sql: String, pivotTable: Boolean) {
       java.util.regex.Matcher.quoteReplacement(s"${base}_${sheetName}_sheet")
     })
   }
-
-  /** [[formatQuery]] plus, when `sqliteDialect` is set, the full
-    * SQLite→Spark dialect rewrite ([[SqliteDialect.rewrite]]: quoted
-    * identifiers, GLOB, strftime) — the integration point the pipeline
-    * uses, gated on `spark.graft.sqlite.dialect`.
-    */
-  def formatQuery(fileName: String, sqliteDialect: Boolean): String = {
-    val base = formatQuery(fileName)
-    if (sqliteDialect) SqliteDialect.rewrite(base) else base
-  }
 }
 
 object Query {

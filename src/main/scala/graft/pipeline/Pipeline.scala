@@ -110,13 +110,13 @@ class Pipeline(spark: SparkSession, workingDir: String) {
     bundle.queries.map { q =>
       q.name -> bundle.fileMatches.map { m =>
         val file = matched(m)
-        val formatted = q.formatQuery(file, sqliteDialect)
-        // features Spark lacks (GROUPS frames) fail with a friendly
-        // one-liner, not a raw Catalyst parse error. The dialect rewrite
-        // preflights internally, so only the Spark-dialect path needs it
-        // here (running it twice was harmless but wasteful).
-        if (!sqliteDialect) SqliteDialect.preflight(formatted)
-        val df = spark.sql(formatted)
+        val formatted = q.formatQuery(file)
+        // SQLite SQL goes through the dialect's one entry point; in
+        // Spark's dialect, features Spark lacks (GROUPS frames) fail
+        // with a friendly one-liner, not a raw Catalyst parse error
+        val df =
+          if (sqliteDialect) SqliteDialect.sql(spark, formatted)
+          else { SqliteDialect.preflight(formatted); spark.sql(formatted) }
         // A10: non-pivot results get match-prefixed columns
         // (query_iterator.py:111-119,133-134)
         val out = if (q.pivotTable) df else Combinators.prefixColumns(df, m)

@@ -1,5 +1,15 @@
 package graft.pipeline
 
+import scala.util.matching.Regex
+
+import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.util.DateTimeConstants._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DayTimeIntervalType => DT, StringType, YearMonthIntervalType => YM}
+import org.apache.spark.unsafe.types.UTF8String
+
 /** A feature of the SQLite pass-through surface that Spark's SQL engine
   * genuinely lacks — raised by the dialect preflight so users get a
   * clear one-line diagnosis instead of a raw Catalyst parse error.
@@ -8,65 +18,123 @@ final class UnsupportedSqlFeatureException(val feature: String, detail: String)
   extends IllegalArgumentException(
     s"unsupported: $feature — $detail (see SCALE.md, 'dialect limits')")
 
-/** Scalar-dialect bridges for the SQLite pass-through surface
-  * (SURVEY.md §2.C): translations a user migrating SQLite query strings
-  * needs. [[rewrite]] is the integrated entry point the pipeline calls
-  * before `spark.sql` (behind `spark.graft.sqlite.dialect`, the same
-  * flag family as [[graft.plans.SqliteBareColumnRule]]); the individual
-  * translators stay public for direct use and specs.
+/** The SQLite pass-through surface (SURVEY.md §2.C). [[sql]] is the one
+  * way SQLite SQL reaches Spark; the pipeline calls it behind
+  * `spark.graft.sqlite.dialect` (the same flag family as
+  * [[graft.plans.SqliteBareColumnRule]]).
+  *
+  * Spark's own front end does what it can: its parser reads `"…"` as an
+  * identifier (`spark.sql.ansi.doubleQuotedIdentifiers`) and `''` as a
+  * quote inside a literal, and `strftime` is a session function built
+  * from the analyzer's resolved arguments. Text is rewritten only where
+  * Spark has no syntax: GLOB, GROUPS frames, frame EXCLUDE clauses, and
+  * backslashes (ordinary characters in SQLite, escapes to Spark).
   *
   * Reference seam: the reference passes user SQL strings verbatim to
-  * SQLite (`/root/reference/query_iterator.py:131`), so any SQLite-only
-  * syntax its users rely on arrives here.
+  * SQLite (`query_iterator.py:131`), so any SQLite-only syntax its users
+  * rely on arrives here.
   */
 object SqliteDialect {
 
-  /** Session conf key enabling the pre-`spark.sql` dialect rewrite. */
+  /** Session conf key routing the pipeline's queries through [[sql]]. */
   val ConfKey = "spark.graft.sqlite.dialect"
 
-  /** Full SQLite→Spark dialect rewrite, after [[stripComments]]:
-    *   1. double-quoted identifiers → backtick identifiers (SQLite and
-    *      the SQL standard quote identifiers with `"`; Spark reads `"`
-    *      as a string literal);
+  /** SQLite SQL → DataFrame: [[rewrite]], a parse that reads `"…"` as an
+    * identifier, then analysis under the session's own conf, where the
+    * `strftime` calls resolve to [[strftime]].
+    */
+  def sql(spark: SparkSession, sqliteSql: String): DataFrame = {
+    registerStrftime(spark)
+    val text = rewrite(sqliteSql)
+    val plan = SQLConf.withExistingConf(identifierConf(spark))(
+      spark.sessionState.sqlParser.parsePlan(text))
+    GraftExpressionBridge.dataFrame(spark, plan)
+  }
+
+  /** A copy of the session conf whose parser reads `"…"` as an
+    * identifier. Spark honours `spark.sql.ansi.doubleQuotedIdentifiers`
+    * only with ANSI mode on, and the parser builds casts and arithmetic
+    * in the ANSI mode of the conf it parses under; so this copy forces
+    * the identifier reading alone, and a session with ANSI off keeps its
+    * own cast and overflow semantics.
+    */
+  private def identifierConf(spark: SparkSession): SQLConf = {
+    val conf = new SQLConf { override def doubleQuotedIdentifiers: Boolean = true }
+    spark.sessionState.conf.getAllConfs.foreach { case (k, v) => conf.setConfString(k, v) }
+    conf
+  }
+
+  private val StrftimeId = FunctionIdentifier("strftime")
+
+  /** Registers [[strftime]] as the session function `strftime`, once
+    * per session (the idempotent setup of Pathling's
+    * `SqlStrategy.setup`): no session extension is needed.
+    */
+  private def registerStrftime(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(StrftimeId))
+      registry.registerFunction(StrftimeId,
+        new ExpressionInfo(getClass.getName, StrftimeId.funcName), strftime _)
+  }
+
+  /** The text half of [[sql]], after [[stripComments]]:
+    *   1. frame EXCLUDE clauses → window arithmetic ([[rewriteExclude]]);
     *   2. GROUPS window frames → RANGE (over a hoisted `dense_rank()`
     *      for numeric bounds) — [[rewriteGroups]]; untranslatable
     *      shapes raise the friendly preflight error;
     *   3. `expr GLOB 'pat'` → `expr LIKE '<translated>'`, or
     *      `expr RLIKE '<anchored regex>'` when the pattern carries
-    *      `[...]` character classes ([[globToRegex]], round 7);
-    *   4. `strftime('fmt', expr, mods…)` →
-    *      `date_format(<expr with modifiers applied>, '<translated>')`
-    *      — interval arithmetic / `start of` / `utc` modifiers
-    *      translate ([[applyTimeModifier]], round 7), the rest error
-    *      with the friendly diagnosis;
-    *   5. every single-quoted literal is transcoded from SQLite lexing
-    *      ('' escapes a quote, backslash is an ordinary character) to
-    *      Spark default-parser lexing (backslash escapes active) —
-    *      [[transcodeLiterals]] — so e.g. the legal SQLite literal
-    *      `'C:\'` survives as `'C:\\'` instead of un-terminating the
-    *      Spark parse. All scans before this step lex the string
-    *      uniformly as SQLite ([[maskStrings]] with
+    *      `[...]` character classes ([[globToRegex]]);
+    *   4. backslashes made literal for Spark's lexer
+    *      ([[transcodeLiterals]]), so the legal SQLite literal `'C:\'`
+    *      reaches Spark as `'C:\\'`. All scans before this step lex the
+    *      text as SQLite does ([[maskStrings]] with
     *      `backslashEscapes = false`).
+    * `"…"` identifiers, `''` quotes and `strftime` calls pass through for
+    * [[sql]]'s parse and analysis.
     */
   def rewrite(sql: String): String =
-    transcodeLiterals(
-      rewriteStrftime(rewriteGlob(rewriteGroups(rewriteExclude(
-        rewriteDoubleQuoted(stripComments(sql)))))))
+    transcodeLiterals(rewriteGlob(rewriteGroups(rewriteExclude(stripComments(sql)))))
+
+  // ---- the quote-span scanner ------------------------------------------
+
+  private def isQuote(c: Char): Boolean = c == '\'' || c == '"' || c == '`'
+
+  /** Index just past the quoted span opening at `start` — a '…' literal,
+    * a "…" or `…` identifier — or -1 if the input ends inside it. A
+    * doubled quote character stands for itself and continues the span.
+    * Backslash is an ordinary character, as in SQLite; with
+    * `backslashEscapes` (Spark's default lexing) it escapes the next
+    * character inside '…' and "…". Backtick spans have no escape
+    * character in either dialect.
+    */
+  private def quoteEnd(sql: String, start: Int, backslashEscapes: Boolean = false): Int = {
+    val q = sql.charAt(start)
+    var i = start + 1
+    while (i < sql.length) {
+      val c = sql.charAt(i)
+      if (c == '\\' && backslashEscapes && q != '`') i += 2
+      else if (c != q) i += 1
+      else if (i + 1 < sql.length && sql.charAt(i + 1) == q) i += 2
+      else return i + 1
+    }
+    -1
+  }
 
   /** SQLite comments (`-- …` to end of line, `/* … */` or to end of
     * input) → one space each, so a quote in a comment cannot open a span
-    * for the later scans. Steps over '…', "…" and `…` spans (a doubled
-    * quote closes and reopens one); `/*+ … */` hints stay verbatim.
+    * for the later scans. Quoted spans are copied whole; `/*+ … */`
+    * hints stay verbatim.
     */
   private[pipeline] def stripComments(sql: String): String = {
     val sb = new StringBuilder
     var i = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val close = sql.indexOf(c.toInt, i + 1)
-        val end = if (close < 0) sql.length else close + 1
-        sb.append(sql.substring(i, end)); i = end
+      if (isQuote(c)) {
+        val end = quoteEnd(sql, i)
+        val e = if (end < 0) sql.length else end
+        sb.append(sql.substring(i, e)); i = e
       } else if (sql.startsWith("--", i)) {
         val nl = sql.indexOf('\n', i)
         sb.append(' '); i = if (nl < 0) sql.length else nl
@@ -79,6 +147,79 @@ object SqliteDialect {
     }
     sb.toString
   }
+
+  /** Positions-preserving mask: the characters inside every quoted span
+    * are blanked so regex scans can't match into them; the quote
+    * characters that open and close a span survive, keeping offsets
+    * aligned with the original. Double-quoted spans are masked because
+    * preflight also sees Spark-dialect SQL, where `"..."` is a string
+    * literal; in SQLite-dialect input the same span is a quoted
+    * identifier, equally off-limits to keyword scans.
+    *
+    * `backslashEscapes` selects the lexing convention ([[quoteEnd]]).
+    * The PREFLIGHT path sees Spark-dialect SQL, where a backslash
+    * escapes the next character (`'it\'s'`); the DIALECT path sees
+    * SQLite SQL, where a literal may legally END in a backslash
+    * (`'C:\'`).
+    */
+  private def maskStrings(sql: String, backslashEscapes: Boolean): String = {
+    val out = sql.toCharArray
+    var i = 0
+    while (i < out.length) {
+      if (isQuote(out(i))) {
+        val end = quoteEnd(sql, i, backslashEscapes)
+        val close = if (end < 0) out.length else end - 1
+        java.util.Arrays.fill(out, i + 1, close, ' ')
+        i = close + 1
+      } else i += 1
+    }
+    new String(out)
+  }
+
+  /** Read the single-quoted literal starting at `start` (which must be
+    * the opening quote); returns (content with '' unescaped, index past
+    * the closing quote).
+    */
+  private def readLiteral(sql: String, start: Int): (String, Int) = {
+    val end = quoteEnd(sql, start)
+    if (end < 0) throw new IllegalArgumentException(s"unterminated string literal in: $sql")
+    (sql.substring(start + 1, end - 1).replace("''", "'"), end)
+  }
+
+  /** Backslashes made literal for Spark's lexer, which reads them as
+    * escapes inside '…' and "…" where SQLite reads them as characters:
+    * each one in a string literal doubles (`'C:\'` → `'C:\\'`), and a
+    * "…" identifier holding one becomes a `…` identifier, which has no
+    * escape character. Runs LAST in [[rewrite]], so every earlier scan
+    * and emission works on uniformly SQLite-lexed text.
+    */
+  private[pipeline] def transcodeLiterals(sql: String): String = {
+    val sb = new StringBuilder
+    var i = 0
+    while (i < sql.length) {
+      val c = sql.charAt(i)
+      if (!isQuote(c)) { sb.append(c); i += 1 }
+      else {
+        val end = quoteEnd(sql, i)
+        if (end < 0) throw new IllegalArgumentException(s"unterminated $c-quoted span in: $sql")
+        val body = sql.substring(i + 1, end - 1)
+        if (c == '\'') sb.append('\'').append(body.replace("\\", "\\\\")).append('\'')
+        else if (c == '"' && body.contains('\\'))
+          sb.append('`').append(body.replace("\"\"", "\"").replace("`", "``")).append('`')
+        else sb.append(sql.substring(i, end))
+        i = end
+      }
+    }
+    sb.toString
+  }
+
+  /** Escape a runtime string as a SQLite-lexed single-quoted literal
+    * ('' escapes a quote; backslash is an ordinary character).
+    */
+  private def sqliteLiteral(s: String): String =
+    "'" + s.replace("'", "''") + "'"
+
+  // ---- preflight --------------------------------------------------------
 
   /** Genuine frame syntax — a frame bound always ends in PRECEDING /
     * FOLLOWING / CURRENT ROW, so a column that happens to be named
@@ -99,6 +240,8 @@ object SqliteDialect {
   private val GroupsIntentPat =
     (s"(?i)\\bGROUPS\\s+(BETWEEN\\s+.{0,60}?\\b(PRECEDING|FOLLOWING)\\b|$FrameBound)").r
 
+  private val ExcludeKinds = "\\bEXCLUDE\\s+(NO\\s+OTHERS|CURRENT\\s+ROW|GROUP|TIES)\\b"
+
   /** Friendly flagging of features the plain Spark-dialect path cannot
     * express. GROUPS window frames (SQLite 3.28+ / postgres) have no
     * native Spark equivalent — Spark implements ROWS and RANGE only —
@@ -114,8 +257,7 @@ object SqliteDialect {
           "spark.graft.sqlite.dialect (the rewrite emulates GROUPS as " +
           "RANGE over dense_rank()), or rewrite the frame as ROWS " +
           "(identical when the ORDER BY key is unique)")
-    if ("(?i)\\bEXCLUDE\\s+(NO\\s+OTHERS|CURRENT\\s+ROW|GROUP|TIES)\\b".r
-        .findFirstIn(m).isDefined)
+    if (("(?i)" + ExcludeKinds).r.findFirstIn(m).isDefined)
       throw new UnsupportedSqlFeatureException("window frame EXCLUDE clause",
         "Spark has no frame exclusion; enable spark.graft.sqlite.dialect " +
           "(the rewrite emulates EXCLUDE for SUM/COUNT/AVG as " +
@@ -124,12 +266,13 @@ object SqliteDialect {
           "current row)")
   }
 
+  // ---- GLOB ---------------------------------------------------------------
+
   /** SQLite GLOB pattern → SQL LIKE pattern. GLOB is case-sensitive with
     * `*`/`?` wildcards (Spark LIKE is case-sensitive already, so only
     * the wildcards and escaping differ). `[...]` character classes have
     * no LIKE equivalent — [[rewriteGlob]] routes class patterns through
-    * [[globToRegex]]/RLIKE instead (round 7; formerly a documented
-    * dialect limit).
+    * [[globToRegex]]/RLIKE instead.
     */
   def globToLike(glob: String): String = {
     if (glob.exists(c => c == '[' || c == ']'))
@@ -199,6 +342,43 @@ object SqliteDialect {
     sb.append('$').toString
   }
 
+  /** `expr GLOB 'pattern'` → `expr LIKE '<translated>'`. Only the
+    * literal-pattern form is rewritten; a GLOB token NOT followed by a
+    * string literal is left untouched — it is usually an identifier
+    * named `glob` (legal SQLite), and rewriting or rejecting it would
+    * break queries that never use the operator. A genuine
+    * computed-pattern GLOB therefore surfaces as Spark's own parse
+    * error rather than a silent mistranslation.
+    */
+  private[pipeline] def rewriteGlob(sql: String): String = {
+    def loop(s: String, from: Int): String = {
+      "(?i)\\bGLOB\\b".r.findFirstMatchIn(
+        maskStrings(s, backslashEscapes = false).substring(from)) match {
+        case None => s
+        case Some(mm) =>
+          val kwStart = from + mm.start
+          val kwEnd = from + mm.end
+          val afterKw = s.indexWhere(!_.isWhitespace, kwEnd)
+          if (afterKw < 0 || s.charAt(afterKw) != '\'')
+            loop(s, kwEnd) // identifier named glob — skip past it
+          else {
+            val (glob, next) = readLiteral(s, afterKw)
+            // plain wildcards stay LIKE (codegen'd StartsWith/Contains
+            // specializations); character classes need RLIKE
+            val op =
+              if (glob.exists(c => c == '[' || c == ']'))
+                "RLIKE " + sqliteLiteral(globToRegex(glob))
+              else "LIKE " + sqliteLiteral(globToLike(glob))
+            val replaced = s.substring(0, kwStart) + op
+            loop(replaced + s.substring(next), replaced.length)
+          }
+      }
+    }
+    loop(sql, 0)
+  }
+
+  // ---- strftime -----------------------------------------------------------
+
   /** SQLite strftime format → Spark/Java datetime pattern.
     * Covers the directives SQLite documents; unknown directives error
     * rather than silently passing through.
@@ -240,54 +420,85 @@ object SqliteDialect {
     sb.toString
   }
 
-  // ---- structural rewrites ---------------------------------------------
-
-  /** Positions-preserving mask: characters INSIDE single-quoted string
-    * literals, backtick-quoted identifiers (rewriteDoubleQuoted runs
-    * before the keyword scans, so quoted identifiers arrive
-    * backtick-wrapped), AND double-quoted spans are blanked so regex
-    * scans can't match into them; the quote characters themselves
-    * survive, keeping offsets aligned with the original. Double-quoted
-    * spans are masked because preflight also sees Spark-dialect SQL,
-    * where `"..."` is a string literal — a query mentioning "GROUPS
-    * UNBOUNDED PRECEDING" inside a literal must not be rejected; in
-    * SQLite-dialect input the same span is a quoted identifier, equally
-    * off-limits to keyword scans.
-    *
-    * `backslashEscapes` selects the lexing convention. The PREFLIGHT
-    * path sees Spark-dialect SQL, where the default parser keeps
-    * backslash escapes active inside single/double-quoted spans
-    * (`'it\'s'`, `"say \"hi\""`) — without consuming the escaped quote
-    * the mask's quote state inverts and corrupts everything after it.
-    * The DIALECT-rewrite path sees SQLite SQL, where backslash is an
-    * ordinary character and '' is the only quote escape (a literal may
-    * legally END in a backslash: `'C:\'`) — there the same consumption
-    * would invert the state instead. '' needs no special handling in
-    * either mode: the two quotes toggle the state twice, leaving the
-    * span open. Backtick spans have no escape character in either
-    * dialect.
+  /** The session function `strftime(fmt, time, mod, …)`, from resolved
+    * arguments: `date_format(<time with the modifiers applied left to
+    * right>, <fmt as a Spark pattern>)`. The format and each modifier
+    * must be string literals.
     */
-  private def maskStrings(sql: String, backslashEscapes: Boolean): String = {
-    val out = sql.toCharArray
-    var i = 0
-    var inStr = false
-    var inTick = false
-    var inDq = false
-    while (i < out.length) {
-      if (backslashEscapes && (inStr || inDq) && out(i) == '\\' && i + 1 < out.length) {
-        out(i) = ' '; out(i + 1) = ' '; i += 2
-      } else {
-        if (!inTick && !inDq && out(i) == '\'') inStr = !inStr
-        else if (!inStr && !inDq && out(i) == '`') inTick = !inTick
-        else if (!inStr && !inTick && out(i) == '"') inDq = !inDq
-        else if (inStr || inTick || inDq) out(i) = ' '
-        i += 1
-      }
+  private[pipeline] def strftime(args: Seq[Expression]): Expression = {
+    def stringLiteral(e: Expression): Option[String] = e match {
+      case Literal(v: UTF8String, _: StringType) => Some(v.toString)
+      case _ => None
     }
-    new String(out)
+    if (args.length < 2) throw new IllegalArgumentException(
+      s"strftime takes a format and a time value, got ${args.length} argument(s)")
+    val fmt = stringLiteral(args.head).getOrElse(throw new UnsupportedSqlFeatureException(
+      "strftime with non-literal format",
+      "only strftime('<literal>', expr, …) can be translated"))
+    val time = args.drop(2).foldLeft(args(1)) { (t, mod) =>
+      applyTimeModifier(t, stringLiteral(mod).getOrElse(
+        if (mod.foldable && !mod.isInstanceOf[Literal])
+          throw new UnsupportedSqlFeatureException("strftime with a computed modifier",
+            s"modifier '${mod.sql}' must be a plain string literal")
+        else throw new UnsupportedSqlFeatureException("strftime with a non-literal modifier",
+          s"modifier '${mod.sql}' must be a string literal")))
+    }
+    DateFormatClass(time, Literal(strftimeToSpark(fmt)))
   }
 
-  // ---- GROUPS frame emulation ------------------------------------------
+  /** One SQLite datetime modifier applied to a time expression — the
+    * left-to-right semantics of SQLite's `strftime(fmt, time, mod, …)`.
+    * Supported: signed `±N day/hour/minute/second/month/year`
+    * arithmetic → `t ± INTERVAL N UNIT`; `start of day/month/year` →
+    * `date_trunc`; `utc` → no-op (the engine pins the session to UTC,
+    * so times already ARE UTC); `weekday N`; `unixepoch`. Still
+    * unsupported, loudly: `localtime` (needs a client zone the engine
+    * doesn't model), the `julianday`/`subsec` value reinterpretations,
+    * and fractional offsets.
+    */
+  private def applyTimeModifier(t: Expression, mod: String): Expression = {
+    val Offset = """([+-])(\d+) (day|hour|minute|second|month|year)s?""".r
+    val StartOf = """start of (day|month|year)""".r
+    val Weekday = """weekday ([0-6])""".r
+    mod.trim.toLowerCase match {
+      case Offset(sign, n, unit) =>
+        val i = interval(n.toLong, unit)
+        if (sign == "+") Add(t, i) else Subtract(t, i)
+      case StartOf(unit) => TruncTimestamp(Literal(unit.toUpperCase), t)
+      case "utc" => t
+      // SQLite: advance to the next date where weekday = N (0 =
+      // Sunday), no change if already there. Spark dayofweek is
+      // 1-based Sunday, so the forward distance is (N − (dow−1)) mod 7
+      // days — added as an interval to preserve the time of day
+      // exactly as SQLite does.
+      case Weekday(n) =>
+        def lit(v: Int) = Literal(v)
+        val days = Remainder(Add(Remainder(
+          Subtract(lit(n.toInt), Subtract(DayOfWeek(t), lit(1))), lit(7)), lit(7)), lit(7))
+        Add(t, new MakeInterval(lit(0), lit(0), lit(0), days, lit(0), lit(0), lit(0)))
+      // SQLite: reinterpret the raw value as unix epoch SECONDS
+      // (only meaningful as the first modifier over a numeric value;
+      // SQLite itself ignores the prior interpretation, so applying
+      // it to the original expression is the faithful reading).
+      case "unixepoch" => SecondsToTimestamp(t)
+      case other => throw new UnsupportedSqlFeatureException(
+        s"strftime modifier '$other'",
+        "supported modifiers: '±N day/hour/minute/second/month/year', " +
+          "'start of day/month/year', 'utc', 'weekday 0-6', 'unixepoch'")
+    }
+  }
+
+  /** The literal Spark's parser makes of `INTERVAL n <unit>`. */
+  private def interval(n: Long, unit: String): Literal = unit match {
+    case "year" => Literal(Math.toIntExact(Math.multiplyExact(n, 12L)), YM(YM.YEAR))
+    case "month" => Literal(Math.toIntExact(n), YM(YM.MONTH))
+    case "day" => Literal(Math.multiplyExact(n, MICROS_PER_DAY), DT(DT.DAY))
+    case "hour" => Literal(Math.multiplyExact(n, MICROS_PER_HOUR), DT(DT.HOUR))
+    case "minute" => Literal(Math.multiplyExact(n, MICROS_PER_MINUTE), DT(DT.MINUTE))
+    case "second" => Literal(Math.multiplyExact(n, MICROS_PER_SECOND), DT(DT.SECOND))
+  }
+
+  // ---- window frames: the inline OVER (…) walk ------------------------------
 
   /** Paren depth before each character, counting only parens OUTSIDE
     * quoted spans (computed over a [[maskStrings]] image).
@@ -305,46 +516,71 @@ object SqliteDialect {
     depth
   }
 
-  /** One parsed GROUPS frame bound: canonical SQL text + whether it is
-    * a numeric `n PRECEDING/FOLLOWING` (the shapes needing dense_rank).
+  /** One inline window spec: `OVER (` matched at `over`, its parens at
+    * `open` and `close`, and `span` the masked text between them.
     */
-  private case class Bound(text: String, numeric: Boolean)
+  private final case class WindowSpec(over: Regex.Match, open: Int, close: Int, span: String) {
+    private lazy val depth = parenDepths(span)
 
-  /** Parse the frame bound at the start of `s`; returns the bound and
-    * the remainder of `s`, or None if `s` starts with no literal bound.
-    */
-  private def parseBound(s: String): Option[(Bound, String)] = {
-    val t = s.dropWhile(_.isWhitespace)
-    "(?i)^(UNBOUNDED\\s+(PRECEDING|FOLLOWING)|CURRENT\\s+ROW|(\\d+)\\s+(PRECEDING|FOLLOWING))".r
-      .findFirstMatchIn(t)
-      .map { m =>
-        val canonical = m.group(1).split("\\s+").mkString(" ").toUpperCase
-        (Bound(canonical, m.group(3) != null), t.substring(m.end))
-      }
+    /** First match of `pat` at the spec's own top level — depth 0
+      * within the span, so an ORDER BY inside a nested call doesn't
+      * count.
+      */
+    def top(pat: String): Option[Regex.Match] =
+      ("(?i)" + pat).r.findAllMatchIn(span).find(mm => depth(mm.start) == 0)
   }
 
-  /** GROUPS window frames (SQLite 3.28+): frames counting PEER GROUPS
-    * of the ORDER BY key instead of rows. Spark implements ROWS and
-    * RANGE only, but GROUPS is expressible:
+  private final case class Edit(start: Int, end: Int, text: String)
+
+  /** Rewrites the inline `OVER (…)` specs of `sql` (`masked` is its
+    * [[maskStrings]] image): `edit` maps each spec to at most one edit
+    * of `sql`, and the edits are spliced in.
     *
-    *   - bounds using only UNBOUNDED / CURRENT ROW: identical to the
-    *     same RANGE frame (both always cover whole peer groups), so the
-    *     GROUPS keyword simply becomes RANGE — any query shape;
-    *   - numeric bounds (`n PRECEDING/FOLLOWING`): peer-group distance
-    *     equals the difference of `dense_rank()` over the same
-    *     partition/order, so the frame becomes RANGE with the same
-    *     bounds over a hoisted rank column. Spark cannot nest window
-    *     functions, so the rank is computed in an injected
-    *     `FROM (SELECT *, DENSE_RANK() OVER (…) AS __graft_grankN …)`
-    *     subquery — supported when the GROUPS window sits in the
-    *     query's outermost SELECT list with no DISTINCT / GROUP BY /
-    *     HAVING / set operator at that level (friendly error
-    *     otherwise). ORDER BY direction lives inside the rank
-    *     definition, so DESC and multi-key orders translate unchanged.
-    *
-    * EXCLUDE clauses and non-literal bounds are genuinely
-    * untranslatable and always rejected.
+    *   - Overlapping edits mean a rewritten window inside another one's
+    *     text (an excluded aggregate whose ARGUMENT holds its own OVER …
+    *     EXCLUDE); splicing both would emit corrupted SQL, so they are
+    *     rejected.
+    *   - A `frame` match outside every inline spec can only sit in a
+    *     named WINDOW clause, which this walk never visits; left alone
+    *     it would surface as a raw Catalyst parse error, so it gets the
+    *     friendly one.
     */
+  private def editWindows(sql: String, masked: String, name: String, feature: String,
+      frame: Regex)(edit: WindowSpec => Option[Edit]): String = {
+    val outside = masked.toCharArray
+    val edits = "(?i)\\bOVER\\s*\\(".r.findAllMatchIn(masked).flatMap { m =>
+      val open = m.end - 1
+      var i = open + 1
+      var d = 1
+      while (i < masked.length && d > 0) {
+        if (masked.charAt(i) == '(') d += 1
+        else if (masked.charAt(i) == ')') d -= 1
+        i += 1
+      }
+      if (d != 0) throw new IllegalArgumentException(
+        s"unbalanced window specification in: $sql")
+      java.util.Arrays.fill(outside, open + 1, i - 1, ' ')
+      edit(WindowSpec(m, open, i - 1, masked.substring(open + 1, i - 1)))
+    }.toSeq.sortBy(_.start)
+    if (frame.findFirstIn(new String(outside)).isDefined)
+      throw new UnsupportedSqlFeatureException(
+        s"$feature in a named WINDOW clause",
+        s"the $name emulation rewrites frames written inline in an " +
+          "OVER (...) spec only; move the frame from the WINDOW " +
+          "definition into each OVER clause")
+    edits.sliding(2).foreach { w =>
+      if (w.size == 2 && w(1).start < w(0).end)
+        throw new UnsupportedSqlFeatureException(
+          s"nested $name windows",
+          s"a window with $name inside another rewritten window cannot " +
+            "be rewritten in place; compute the inner window in a " +
+            "subquery first")
+    }
+    edits.reverse.foldLeft(sql) { (s, e) =>
+      s.substring(0, e.start) + e.text + s.substring(e.end)
+    }
+  }
+
   /** Window-frame EXCLUDE clause emulation (SQLite window grammar,
     * sqlite.org/windowfunctions.html §2.2; Spark has no frame
     * exclusion): for DECOMPOSABLE aggregates the excluded result is
@@ -372,21 +608,23 @@ object SqliteDialect {
     * into the two contiguous ROWS sub-frames strictly before and
     * strictly after the current row, and LEAST/GREATEST of the two
     * sub-aggregates (null-skipping; NULL only when both sub-frames are
-    * empty) is the exact excluded result. MEDIAN (round 11) rides the
-    * same split but merges the sub-frame VALUES instead of
-    * sub-aggregates: collect_list over the two ROWS sub-frames,
-    * concatenated and sorted, with the exact interpolated median of
-    * the result (quantile_cont(0.5): NULLs skipped, even counts
-    * average the two middles, DOUBLE, NULL on empty) — still
-    * windowed, per-row state bounded by the frame width.
+    * empty) is the exact excluded result. MEDIAN rides the same split
+    * but merges the sub-frame VALUES instead of sub-aggregates:
+    * collect_list over the two ROWS sub-frames, concatenated and
+    * sorted, with the exact interpolated median of the result
+    * (quantile_cont(0.5): NULLs skipped, even counts average the two
+    * middles, DOUBLE, NULL on empty) — still windowed, per-row state
+    * bounded by the frame width. Positional splitting needs a ROWS
+    * frame, and only EXCLUDE CURRENT ROW has a statically known
+    * position — GROUP/TIES depend on runtime peer locations.
     *
-    * Split-family aggregates with GROUP/TIES (peer positions are
-    * runtime data), split-family on RANGE or default frames (value
-    * distances cannot be split positionally), other order statistics
-    * (arbitrary percentiles — no split rewrite implemented), EXCLUDE
-    * on a GROUPS frame (rejected with the GROUPS error downstream),
-    * DISTINCT aggregates, and specs without ORDER BY (every row is a
-    * peer — restructure instead) all raise the friendly error.
+    * Split-family aggregates with GROUP/TIES, split-family on RANGE or
+    * default frames (value distances cannot be split positionally),
+    * other order statistics (arbitrary percentiles — no split rewrite
+    * implemented), DISTINCT aggregates, and specs without ORDER BY
+    * (every row is a peer — restructure instead) all raise the friendly
+    * error. EXCLUDE on a GROUPS frame is left in place for
+    * [[rewriteGroups]]' own, more specific rejection.
     *
     * Containment guards (the arithmetic is only exact when the frame
     * provably contains what it subtracts): frames whose literal bounds
@@ -400,36 +638,12 @@ object SqliteDialect {
     */
   private[pipeline] def rewriteExclude(sql: String): String = {
     val masked = maskStrings(sql, backslashEscapes = false)
-    val ExcludeKinds = "\\bEXCLUDE\\s+(NO\\s+OTHERS|CURRENT\\s+ROW|GROUP|TIES)\\b"
     if ("(?i)\\bEXCLUDE\\b".r.findFirstIn(masked).isEmpty) return sql
-
-    case class Edit(start: Int, end: Int, text: String)
-    val edits = scala.collection.mutable.ArrayBuffer.empty[Edit]
-    // an EXCLUDE on a GROUPS frame is left in place for rewriteGroups'
-    // own (more specific) rejection
-    var leftForGroups = false
-
-    for (m <- "(?i)\\bOVER\\s*\\(".r.findAllMatchIn(masked)) {
-      val open = m.end - 1
-      var i = open + 1
-      var d = 1
-      while (i < masked.length && d > 0) {
-        if (masked.charAt(i) == '(') d += 1
-        else if (masked.charAt(i) == ')') d -= 1
-        i += 1
-      }
-      if (d != 0) throw new IllegalArgumentException(
-        s"unbalanced window specification in: $sql")
-      val close = i - 1
-      val span = masked.substring(open + 1, close)
-      val spanDepth = parenDepths(span)
-      def topMatch(pat: String) =
-        ("(?i)" + pat).r.findAllMatchIn(span).find(mm => spanDepth(mm.start) == 0)
-      val hasExclude = topMatch("\\bEXCLUDE\\b").isDefined
-      val skipForGroups = topMatch("\\bGROUPS\\b").isDefined
-      if (hasExclude && skipForGroups) leftForGroups = true
-      if (hasExclude && !skipForGroups) {
-        val exM = topMatch(ExcludeKinds)
+    editWindows(sql, masked, "EXCLUDE", "EXCLUDE", ("(?i)" + ExcludeKinds).r) { spec =>
+      val (open, close, span) = (spec.open, spec.close, spec.span)
+      if (spec.top("\\bEXCLUDE\\b").isEmpty || spec.top("\\bGROUPS\\b").isDefined) None
+      else {
+        val exM = spec.top(ExcludeKinds)
           .getOrElse(throw new UnsupportedSqlFeatureException(
             "window frame EXCLUDE clause",
             s"cannot parse the exclusion in '${sql.substring(open + 1, close)}'"))
@@ -438,16 +652,15 @@ object SqliteDialect {
             "window frame EXCLUDE clause",
             "EXCLUDE must be the final clause of the frame specification")
         val kind = exM.group(1).toUpperCase.replaceAll("\\s+", " ")
-        if (kind == "NO OTHERS") {
-          edits += Edit(open + 1 + exM.start, open + 1 + exM.end, "")
-        } else {
-          if (topMatch("\\bORDER\\s+BY\\b").isEmpty)
+        if (kind == "NO OTHERS") Some(Edit(open + 1 + exM.start, open + 1 + exM.end, ""))
+        else {
+          if (spec.top("\\bORDER\\s+BY\\b").isEmpty)
             throw new UnsupportedSqlFeatureException(
               s"EXCLUDE $kind without ORDER BY",
               "every partition row is a peer of every other; aggregate " +
                 "without the window or add an ORDER BY")
           // the aggregate call immediately before OVER
-          var p = m.start - 1
+          var p = spec.over.start - 1
           while (p >= 0 && Character.isWhitespace(masked.charAt(p))) p -= 1
           if (p < 0 || masked.charAt(p) != ')')
             throw new UnsupportedSqlFeatureException(
@@ -483,22 +696,6 @@ object SqliteDialect {
                 "the current row; other aggregates (arbitrary " +
                 "percentiles, mode) do neither — restructure with a " +
                 "self-join")
-          // MIN/MAX do NOT decompose by subtraction (removing a value
-          // can expose any earlier one), but they MERGE: the frame minus
-          // the current row is two contiguous ROWS sub-frames, and
-          // LEAST/GREATEST of the two sub-aggregates (both null-skipping
-          // in Spark, NULL only when both sub-frames are empty) is the
-          // exact excluded result. MEDIAN (round-11: VERDICT r10
-          // "What's missing" #2) is not even mergeable from
-          // sub-AGGREGATES, but the sub-frame VALUES merge: collect the
-          // two sub-frames' values (collect_list, null-skipping like
-          // the aggregate) and take the exact interpolated median of
-          // the sorted concatenation — still windowed, no self-join,
-          // per-row state bounded by the frame width (the same work a
-          // native-EXCLUDE engine does for an order statistic).
-          // Positional splitting needs a ROWS frame and only EXCLUDE
-          // CURRENT ROW has a statically known position — GROUP/TIES
-          // depend on runtime peer locations.
           if (isSplitFn && kind != "CURRENT ROW")
             throw new UnsupportedSqlFeatureException(
               s"EXCLUDE $kind with $fn",
@@ -513,16 +710,10 @@ object SqliteDialect {
           // Containment guard (translate-exactly-or-throw): the
           // frame-minus-exclusion arithmetic subtracts the exclusion as
           // if the frame wholly contained it, so it is only exact when
-          // that provably holds. Peers always sit inside a RANGE (or
-          // default) frame that spans the current row — peers are at
-          // value-distance 0 — but in a ROWS frame tied peers can lie
-          // outside ANY bound, and ties are not statically detectable,
-          // so GROUP/TIES on ROWS frames are rejected. Every exclusion
-          // kind subtracts values anchored at the current row, so the
-          // literal bounds must span it (a 'BETWEEN 3 PRECEDING AND 1
-          // PRECEDING' frame never contains the row being subtracted);
-          // non-literal bounds cannot be verified statically.
-          val fM = topMatch("\\b(ROWS|RANGE)\\b")
+          // that provably holds. Every exclusion kind subtracts values
+          // anchored at the current row, so the literal bounds must
+          // span it; non-literal bounds cannot be verified statically.
+          val fM = spec.top("\\b(ROWS|RANGE)\\b")
           val bounds = fM.map { fm =>
             val body = span.substring(fm.end, exM.start).trim
             val Btw = "(?is)^BETWEEN\\s+(.+?)\\s+AND\\s+(.+)$".r
@@ -577,9 +768,9 @@ object SqliteDialect {
             (fm, startB.trim, endB.trim, startRel, endRel)
           }
           val replacement = if (isSplitFn) {
-            // frame-splitting path: MIN/MAX(arg) over the frame minus
-            // the current row = LEAST/GREATEST over the two ROWS
-            // sub-frames strictly before and strictly after it
+            // frame-splitting path: the aggregate over the frame minus
+            // the current row, from the two ROWS sub-frames strictly
+            // before and strictly after it
             val (fm, startB, endB, startRel, endRel) = bounds.getOrElse(
               throw new UnsupportedSqlFeatureException(
                 s"EXCLUDE CURRENT ROW with $fn on the default frame",
@@ -600,14 +791,10 @@ object SqliteDialect {
               if (endRel > 0) Some(s"ROWS BETWEEN 1 FOLLOWING AND $endB")
               else None
             if (isMedian) {
-              // exact interpolated median (the SQLite-extension /
-              // DuckDB quantile_cont(0.5) semantic: NULLs skipped,
-              // even-count frames average the two middles, DOUBLE
-              // result, NULL on an empty frame) over the merged
-              // sub-frame values. collect_list skips NULLs like the
-              // aggregate; identical window specs collapse to one
-              // Window operator, so the repeated `arr` text is
-              // evaluated once per distinct sub-frame.
+              // collect_list skips NULLs like the aggregate; identical
+              // window specs collapse to one Window operator, so the
+              // repeated `arr` text is evaluated once per distinct
+              // sub-frame
               def lst(frame: String) =
                 s"coalesce((collect_list($arg) OVER ($prefix $frame)), array())"
               val arr = (leftF, rightF) match {
@@ -625,113 +812,110 @@ object SqliteDialect {
                 s"ELSE (CAST(${at(s"size($arr) DIV 2")} AS DOUBLE) + " +
                 s"CAST(${at(s"size($arr) DIV 2 + 1")} AS DOUBLE)) / 2 END)"
             } else {
-            val combine = if (fn == "MIN") "LEAST" else "GREATEST"
-            (leftF, rightF) match {
-              case (Some(lf), Some(rf)) => s"$combine(${sub(lf)}, ${sub(rf)})"
-              case (Some(lf), None) => sub(lf)
-              case (None, Some(rf)) => sub(rf)
-              // frame = exactly the current row, which is excluded:
-              // NULL with the argument's type
-              case (None, None) => s"(CASE WHEN 1=0 THEN ($arg) END)"
-            }
+              val combine = if (fn == "MIN") "LEAST" else "GREATEST"
+              (leftF, rightF) match {
+                case (Some(lf), Some(rf)) => s"$combine(${sub(lf)}, ${sub(rf)})"
+                case (Some(lf), None) => sub(lf)
+                case (None, Some(rf)) => sub(rf)
+                // frame = exactly the current row, which is excluded:
+                // NULL with the argument's type
+                case (None, None) => s"(CASE WHEN 1=0 THEN ($arg) END)"
+              }
             }
           } else {
-          // frame spec without the EXCLUDE tail; peers spec = partition
-          // + order only, peer-group RANGE frame
-          val frameSpec = sql.substring(open + 1, open + 1 + exM.start).trim
-          val fIdx = fM.map(_.start).getOrElse(exM.start)
-          val peersSpec = sql.substring(open + 1, open + 1 + math.min(fIdx, exM.start)).trim +
-            " RANGE BETWEEN CURRENT ROW AND CURRENT ROW"
-          val F = s"OVER ($frameSpec)"
-          val P = s"OVER ($peersSpec)"
-          val curCnt =
-            if (star) "1" else s"(CASE WHEN ($arg) IS NULL THEN 0 ELSE 1 END)"
-          val cntArg = if (star) "*" else arg
-          val (sumX, cntX) = kind match {
-            case "CURRENT ROW" =>
-              (s"COALESCE(($arg), 0)", curCnt)
-            case "GROUP" =>
-              (s"COALESCE((SUM($arg) $P), 0)", s"(COUNT($cntArg) $P)")
-            case "TIES" =>
-              (s"(COALESCE((SUM($arg) $P), 0) - COALESCE(($arg), 0))",
-                s"((COUNT($cntArg) $P) - $curCnt)")
+            // frame spec without the EXCLUDE tail; peers spec = partition
+            // + order only, peer-group RANGE frame
+            val frameSpec = sql.substring(open + 1, open + 1 + exM.start).trim
+            val fIdx = fM.map(_.start).getOrElse(exM.start)
+            val peersSpec = sql.substring(open + 1, open + 1 + math.min(fIdx, exM.start)).trim +
+              " RANGE BETWEEN CURRENT ROW AND CURRENT ROW"
+            val F = s"OVER ($frameSpec)"
+            val P = s"OVER ($peersSpec)"
+            val curCnt =
+              if (star) "1" else s"(CASE WHEN ($arg) IS NULL THEN 0 ELSE 1 END)"
+            val cntArg = if (star) "*" else arg
+            val (sumX, cntX) = kind match {
+              case "CURRENT ROW" =>
+                (s"COALESCE(($arg), 0)", curCnt)
+              case "GROUP" =>
+                (s"COALESCE((SUM($arg) $P), 0)", s"(COUNT($cntArg) $P)")
+              case "TIES" =>
+                (s"(COALESCE((SUM($arg) $P), 0) - COALESCE(($arg), 0))",
+                  s"((COUNT($cntArg) $P) - $curCnt)")
+            }
+            fn match {
+              case "COUNT" => s"((COUNT($cntArg) $F) - $cntX)"
+              case "SUM" =>
+                s"(CASE WHEN (COUNT($arg) $F) - $cntX = 0 THEN NULL " +
+                  s"ELSE (SUM($arg) $F) - $sumX END)"
+              case "AVG" =>
+                s"(CASE WHEN (COUNT($arg) $F) - $cntX = 0 THEN NULL " +
+                  s"ELSE CAST((SUM($arg) $F) - $sumX AS DOUBLE) / " +
+                  s"((COUNT($arg) $F) - $cntX) END)"
+            }
           }
-          fn match {
-            case "COUNT" => s"((COUNT($cntArg) $F) - $cntX)"
-            case "SUM" =>
-              s"(CASE WHEN (COUNT($arg) $F) - $cntX = 0 THEN NULL " +
-                s"ELSE (SUM($arg) $F) - $sumX END)"
-            case "AVG" =>
-              s"(CASE WHEN (COUNT($arg) $F) - $cntX = 0 THEN NULL " +
-                s"ELSE CAST((SUM($arg) $F) - $sumX AS DOUBLE) / " +
-                s"((COUNT($arg) $F) - $cntX) END)"
-          }
-          }
-          edits += Edit(idStart, close + 1, replacement)
+          Some(Edit(idStart, close + 1, replacement))
         }
       }
     }
-    // overlapping spans mean a nested rewrite (an excluded aggregate
-    // whose ARGUMENT contains its own OVER … EXCLUDE): the descending-
-    // start splice would apply both edits to overlapping text and emit
-    // corrupted SQL — reject instead of corrupting
-    edits.sortBy(_.start).sliding(2).foreach { w =>
-      if (w.size == 2 && w(1).start < w(0).end)
-        throw new UnsupportedSqlFeatureException(
-          "nested EXCLUDE windows",
-          "an excluded aggregate whose argument itself contains a " +
-            "window with EXCLUDE cannot be rewritten in place; compute " +
-            "the inner window in a subquery first")
-    }
-    val edited = edits.sortBy(-_.start).foldLeft(sql) { (s, e) =>
-      s.substring(0, e.start) + e.text + s.substring(e.end)
-    }
-    // an EXCLUDE the OVER scan never visited (named WINDOW clause)
-    // would otherwise surface as a raw Catalyst parse error
-    if (!leftForGroups && ("(?i)" + ExcludeKinds).r.findFirstIn(
-        maskStrings(edited, backslashEscapes = false)).isDefined)
-      throw new UnsupportedSqlFeatureException(
-        "EXCLUDE in a named WINDOW clause",
-        "the EXCLUDE emulation rewrites frames written inline in an " +
-          "OVER (...) spec only; move the frame from the WINDOW " +
-          "definition into each OVER clause")
-    edited
   }
 
+  /** One parsed GROUPS frame bound: canonical SQL text + whether it is
+    * a numeric `n PRECEDING/FOLLOWING` (the shapes needing dense_rank).
+    */
+  private case class Bound(text: String, numeric: Boolean)
+
+  /** Parse the frame bound at the start of `s`; returns the bound and
+    * the remainder of `s`, or None if `s` starts with no literal bound.
+    */
+  private def parseBound(s: String): Option[(Bound, String)] = {
+    val t = s.dropWhile(_.isWhitespace)
+    "(?i)^(UNBOUNDED\\s+(PRECEDING|FOLLOWING)|CURRENT\\s+ROW|(\\d+)\\s+(PRECEDING|FOLLOWING))".r
+      .findFirstMatchIn(t)
+      .map { m =>
+        val canonical = m.group(1).split("\\s+").mkString(" ").toUpperCase
+        (Bound(canonical, m.group(3) != null), t.substring(m.end))
+      }
+  }
+
+  /** GROUPS window frames (SQLite 3.28+): frames counting PEER GROUPS
+    * of the ORDER BY key instead of rows. Spark implements ROWS and
+    * RANGE only, but GROUPS is expressible:
+    *
+    *   - bounds using only UNBOUNDED / CURRENT ROW: identical to the
+    *     same RANGE frame (both always cover whole peer groups), so the
+    *     GROUPS keyword simply becomes RANGE — any query shape;
+    *   - numeric bounds (`n PRECEDING/FOLLOWING`): peer-group distance
+    *     equals the difference of `dense_rank()` over the same
+    *     partition/order, so the frame becomes RANGE with the same
+    *     bounds over a hoisted rank column. Spark cannot nest window
+    *     functions, so the rank is computed in an injected
+    *     `FROM (SELECT *, DENSE_RANK() OVER (…) AS __graft_grankN …)`
+    *     subquery — supported when the GROUPS window sits in the
+    *     query's outermost SELECT list with no DISTINCT / GROUP BY /
+    *     HAVING / set operator at that level (friendly error
+    *     otherwise). ORDER BY direction lives inside the rank
+    *     definition, so DESC and multi-key orders translate unchanged.
+    *
+    * EXCLUDE clauses and non-literal bounds are genuinely
+    * untranslatable and always rejected.
+    */
   private[pipeline] def rewriteGroups(sql: String): String = {
     val masked = maskStrings(sql, backslashEscapes = false)
     if (GroupsIntentPat.findFirstIn(masked).isEmpty) return sql
     val depth = parenDepths(masked)
-
-    case class Edit(start: Int, end: Int, text: String)
-    val edits = scala.collection.mutable.ArrayBuffer.empty[Edit]
     // (partition-by text, order-by text) -> hoisted rank alias
     val grankDefs = scala.collection.mutable.LinkedHashMap.empty[(String, String), String]
 
-    for (m <- "(?i)\\bOVER\\s*\\(".r.findAllMatchIn(masked)) {
-      val open = m.end - 1
-      var i = open + 1
-      var d = 1
-      while (i < masked.length && d > 0) {
-        if (masked.charAt(i) == '(') d += 1
-        else if (masked.charAt(i) == ')') d -= 1
-        i += 1
-      }
-      if (d != 0) throw new IllegalArgumentException(
-        s"unbalanced window specification in: $sql")
-      val close = i - 1
-      val span = masked.substring(open + 1, close)
-      if (GroupsIntentPat.findFirstIn(span).isDefined) {
+    val edited = editWindows(sql, masked, "GROUPS", "GROUPS frame", GroupsIntentPat) { spec =>
+      val (open, close, span) = (spec.open, spec.close, spec.span)
+      if (GroupsIntentPat.findFirstIn(span).isEmpty) None
+      else {
         if ("(?i)\\bEXCLUDE\\b".r.findFirstIn(span).isDefined)
           throw new UnsupportedSqlFeatureException(
             "GROUPS frame EXCLUDE clause",
             "Spark has no frame exclusion; remove the EXCLUDE clause")
-        // clause keyword positions at the spec's own top level (depth 0
-        // within the span — ORDER BY inside a nested call doesn't count)
-        val spanDepth = parenDepths(span)
-        def topIdx(pat: String): Int =
-          ("(?i)" + pat).r.findAllMatchIn(span)
-            .find(mm => spanDepth(mm.start) == 0).map(_.start).getOrElse(-1)
+        def topIdx(pat: String): Int = spec.top(pat).map(_.start).getOrElse(-1)
         val gIdx = topIdx("\\bGROUPS\\b")
         val oIdx = topIdx("\\bORDER\\s+BY\\b")
         val pIdx = topIdx("\\bPARTITION\\s+BY\\b")
@@ -774,9 +958,9 @@ object SqliteDialect {
           "only UNBOUNDED/CURRENT ROW/<integer> PRECEDING|FOLLOWING bounds translate"))
         if (!b1.numeric && !b2.numeric) {
           // whole-peer-group bounds: GROUPS ≡ RANGE verbatim
-          edits += Edit(open + 1 + gIdx, open + 1 + gIdx + "GROUPS".length, "RANGE")
+          Some(Edit(open + 1 + gIdx, open + 1 + gIdx + "GROUPS".length, "RANGE"))
         } else {
-          if (depth(m.start) != 0)
+          if (depth(spec.over.start) != 0)
             throw new UnsupportedSqlFeatureException(
               "GROUPS frame with numeric bounds inside a subquery",
               "the dense_rank hoist supports the outermost SELECT only; " +
@@ -785,28 +969,16 @@ object SqliteDialect {
           val orderText = sql.substring(open + 1 + oIdx, open + 1 + gIdx).trim
           val alias = grankDefs.getOrElseUpdate((partText, orderText),
             s"__graft_grank${grankDefs.size}")
-          val spec = (if (partText.nonEmpty) partText + " " else "") +
+          val rankSpec = (if (partText.nonEmpty) partText + " " else "") +
             s"ORDER BY $alias RANGE BETWEEN ${b1.text} AND ${b2.text}"
-          edits += Edit(open + 1, close, spec)
+          Some(Edit(open + 1, close, rankSpec))
         }
       }
     }
-    val edited = edits.sortBy(-_.start).foldLeft(sql) { (s, e) =>
-      s.substring(0, e.start) + e.text + s.substring(e.end)
-    }
-    val m2 = maskStrings(edited, backslashEscapes = false)
-    // a GROUPS frame the OVER scan never visited can only live in a
-    // named WINDOW clause (`WINDOW w AS (ORDER BY k GROUPS …)`); left
-    // alone it would surface as a raw Catalyst parse error
-    if (GroupsIntentPat.findFirstIn(m2).isDefined)
-      throw new UnsupportedSqlFeatureException(
-        "GROUPS frame in a named WINDOW clause",
-        "the GROUPS emulation rewrites frames written inline in an " +
-          "OVER (...) spec only; move the frame from the WINDOW " +
-          "definition into each OVER clause")
     if (grankDefs.isEmpty) return edited
 
     // hoist the rank columns: wrap the outermost FROM in a subquery
+    val m2 = maskStrings(edited, backslashEscapes = false)
     val d2 = parenDepths(m2)
     val firstUse = edited.indexOf("__graft_grank")
     val sel = "(?i)\\bSELECT\\b".r.findAllMatchIn(m2)
@@ -866,248 +1038,5 @@ object SqliteDialect {
     edited.substring(0, fromM.start) +
       s"FROM (SELECT *, $defs FROM $fromPart) $hoistAlias " +
       edited.substring(trailingStart)
-  }
-
-  /** `"quoted ident"` → `` `quoted ident` `` outside string literals
-    * and backtick identifiers, which pass through unchanged
-    * ("" unescapes to ", ` escapes as ``). SQLite's string-literal
-    * fallback for unmatched double-quoted names is a documented
-    * misfeature; the standard identifier reading is the faithful one.
-    */
-  private[pipeline] def rewriteDoubleQuoted(sql: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    var inStr = false
-    var inTick = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' && !inTick) { inStr = !inStr; sb.append(c); i += 1 }
-      else if (c == '`' && !inStr) { inTick = !inTick; sb.append(c); i += 1 }
-      else if (c == '"' && !inStr && !inTick) {
-        val ident = new StringBuilder
-        i += 1
-        var closed = false
-        while (i < sql.length && !closed) {
-          val d = sql.charAt(i)
-          if (d == '"' && i + 1 < sql.length && sql.charAt(i + 1) == '"') {
-            ident.append('"'); i += 2
-          } else if (d == '"') { closed = true; i += 1 }
-          else { ident.append(d); i += 1 }
-        }
-        if (!closed) throw new IllegalArgumentException(
-          s"unterminated double-quoted identifier in: $sql")
-        sb.append('`').append(ident.toString.replace("`", "``")).append('`')
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Escape a runtime string for embedding in a Spark single-quoted SQL
-    * literal (default parser mode: backslash escapes active). Used only
-    * by [[transcodeLiterals]] — mid-pipeline emissions use
-    * [[sqliteLiteral]] so the statement stays uniformly SQLite-lexed
-    * until the final transcoding pass.
-    */
-  private def sparkLiteral(s: String): String =
-    "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-  /** Escape a runtime string as a SQLite-lexed single-quoted literal
-    * ('' escapes a quote; backslash is an ordinary character).
-    */
-  private def sqliteLiteral(s: String): String =
-    "'" + s.replace("'", "''") + "'"
-
-  /** Transcode every single-quoted literal from SQLite lexing ('' is
-    * the only escape, backslash ordinary) to Spark default-parser
-    * lexing (backslash escapes active): backslashes in content double,
-    * embedded quotes become `\'`. Backtick-quoted identifier spans pass
-    * through untouched. Runs LAST in [[rewrite]], so every earlier scan
-    * and emission works on uniformly SQLite-lexed text — a legal SQLite
-    * literal ending in a backslash (`'C:\'`) neither corrupts the
-    * scans' mask state nor un-terminates the eventual Spark parse.
-    */
-  private[pipeline] def transcodeLiterals(sql: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    var inTick = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '`') { inTick = !inTick; sb.append(c); i += 1 }
-      else if (c == '\'' && !inTick) {
-        val (content, next) = readLiteral(sql, i)
-        sb.append(sparkLiteral(content))
-        i = next
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Read the single-quoted literal starting at `start` (which must be
-    * the opening quote); returns (content with '' unescaped, index past
-    * the closing quote).
-    */
-  private def readLiteral(sql: String, start: Int): (String, Int) = {
-    require(start < sql.length && sql.charAt(start) == '\'',
-      s"expected string literal at offset $start of: $sql")
-    val content = new StringBuilder
-    var i = start + 1
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' && i + 1 < sql.length && sql.charAt(i + 1) == '\'') {
-        content.append('\''); i += 2
-      } else if (c == '\'') return (content.toString, i + 1)
-      else { content.append(c); i += 1 }
-    }
-    throw new IllegalArgumentException(s"unterminated string literal in: $sql")
-  }
-
-  private def skipWs(sql: String, from: Int): Int = {
-    var i = from
-    while (i < sql.length && sql.charAt(i).isWhitespace) i += 1
-    i
-  }
-
-  /** `expr GLOB 'pattern'` → `expr LIKE '<translated>'`. Only the
-    * literal-pattern form is rewritten; a GLOB token NOT followed by a
-    * string literal is left untouched — it is usually an identifier
-    * named `glob` (legal SQLite), and rewriting or rejecting it would
-    * break queries that never use the operator. A genuine
-    * computed-pattern GLOB therefore surfaces as Spark's own parse
-    * error rather than a silent mistranslation.
-    */
-  private[pipeline] def rewriteGlob(sql: String): String = {
-    def loop(s: String, from: Int): String = {
-      "(?i)\\bGLOB\\b".r.findFirstMatchIn(
-        maskStrings(s, backslashEscapes = false).substring(from)) match {
-        case None => s
-        case Some(mm) =>
-          val kwStart = from + mm.start
-          val kwEnd = from + mm.end
-          val afterKw = skipWs(s, kwEnd)
-          if (afterKw >= s.length || s.charAt(afterKw) != '\'')
-            loop(s, kwEnd) // identifier named glob — skip past it
-          else {
-            val (glob, next) = readLiteral(s, afterKw)
-            // plain wildcards stay LIKE (codegen'd StartsWith/Contains
-            // specializations); character classes need RLIKE
-            val op =
-              if (glob.exists(c => c == '[' || c == ']'))
-                "RLIKE " + sqliteLiteral(globToRegex(glob))
-              else "LIKE " + sqliteLiteral(globToLike(glob))
-            val replaced = s.substring(0, kwStart) + op
-            loop(replaced + s.substring(next), replaced.length)
-          }
-      }
-    }
-    loop(sql, 0)
-  }
-
-  /** One SQLite datetime modifier applied to a (Spark SQL) expression
-    * string — the left-to-right semantics of SQLite's
-    * `strftime(fmt, time, mod, mod, …)`. Supported (round 7; formerly
-    * all rejected): signed `±N day/hour/minute/second/month/year`
-    * arithmetic → `expr ± INTERVAL N UNIT`; `start of day/month/year` →
-    * `date_trunc`; `utc` → no-op (the engine pins the session to UTC,
-    * so times already ARE UTC). Still unsupported, loudly: `localtime`
-    * (needs a client zone the engine doesn't model), `weekday N`,
-    * `unixepoch`/`julianday`/`subsec` value reinterpretations, and
-    * fractional offsets.
-    */
-  private def applyTimeModifier(expr: String, mod: String): String = {
-    val Offset = """([+-])(\d+) (day|hour|minute|second|month|year)s?""".r
-    val StartOf = """start of (day|month|year)""".r
-    val Weekday = """weekday ([0-6])""".r
-    mod.trim.toLowerCase match {
-      case Offset(sign, n, unit) =>
-        s"($expr $sign INTERVAL $n ${unit.toUpperCase})"
-      case StartOf(unit) => s"date_trunc('${unit.toUpperCase}', $expr)"
-      case "utc" => expr
-      // SQLite: advance to the next date where weekday = N (0 =
-      // Sunday), no change if already there. Spark dayofweek is
-      // 1-based Sunday, so the forward distance is (N − (dow−1)) mod 7
-      // days — added as an INTERVAL to preserve the time of day
-      // exactly as SQLite does.
-      case Weekday(n) =>
-        s"($expr + make_interval(0, 0, 0, " +
-          s"(($n - (dayofweek($expr) - 1)) % 7 + 7) % 7, 0, 0, 0))"
-      // SQLite: reinterpret the raw value as unix epoch SECONDS
-      // (only meaningful as the first modifier over a numeric value;
-      // SQLite itself ignores the prior interpretation, so applying
-      // it to the original expression is the faithful reading).
-      case "unixepoch" => s"timestamp_seconds($expr)"
-      case other => throw new UnsupportedSqlFeatureException(
-        s"strftime modifier '$other'",
-        "supported modifiers: '±N day/hour/minute/second/month/year', " +
-          "'start of day/month/year', 'utc', 'weekday 0-6', 'unixepoch'")
-    }
-  }
-
-  /** `strftime('fmt', expr, mods…)` →
-    * `date_format(<expr with modifiers applied>, '<translated>')` —
-    * note the argument order swap. Literal modifier arguments translate
-    * per [[applyTimeModifier]]; non-literal ones are rejected with a
-    * friendly error. Nested calls are handled by recursing into the
-    * expression part.
-    */
-  private[pipeline] def rewriteStrftime(sql: String): String = {
-    val m = "(?i)\\bstrftime\\s*\\(".r.findFirstMatchIn(
-      maskStrings(sql, backslashEscapes = false))
-    m match {
-      case None => sql
-      case Some(mm) =>
-        val fmtStart = skipWs(sql, mm.end)
-        if (fmtStart >= sql.length || sql.charAt(fmtStart) != '\'')
-          throw new UnsupportedSqlFeatureException(
-            "strftime with non-literal format",
-            "only strftime('<literal>', expr, …) can be translated")
-        val (fmt, afterFmt) = readLiteral(sql, fmtStart)
-        val comma = skipWs(sql, afterFmt)
-        if (comma >= sql.length || sql.charAt(comma) != ',')
-          throw new IllegalArgumentException(
-            s"strftime requires a second argument in: $sql")
-        // split the remaining arguments (expr, modifiers…) on top-level
-        // commas outside literals and backtick identifiers, up to the
-        // call's closing paren
-        val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-        val cur = new StringBuilder
-        var i = comma + 1
-        var depth = 0
-        var inStr = false
-        var inTick = false
-        var end = -1
-        while (i < sql.length && end < 0) {
-          val c = sql.charAt(i)
-          val quoted = inStr || inTick
-          if (c == '\'' && !inTick) { inStr = !inStr; cur.append(c) }
-          else if (c == '`' && !inStr) { inTick = !inTick; cur.append(c) }
-          else if (!quoted && c == '(') { depth += 1; cur.append(c) }
-          else if (!quoted && c == ')') {
-            if (depth == 0) end = i else { depth -= 1; cur.append(c) }
-          } else if (!quoted && c == ',' && depth == 0) {
-            parts += cur.toString; cur.clear()
-          } else cur.append(c)
-          i += 1
-        }
-        if (end < 0) throw new IllegalArgumentException(
-          s"unterminated strftime call in: $sql")
-        parts += cur.toString
-        val timeExpr = rewriteStrftime(parts.head.trim)
-        val wrapped = parts.tail.foldLeft(timeExpr) { (e, raw) =>
-          val t = raw.trim
-          if (t.length < 2 || t.charAt(0) != '\'')
-            throw new UnsupportedSqlFeatureException(
-              "strftime with a non-literal modifier",
-              s"modifier '$t' must be a string literal")
-          val (lit, after) = readLiteral(t, 0)
-          if (after != t.length)
-            throw new UnsupportedSqlFeatureException(
-              "strftime with a computed modifier",
-              s"modifier '$t' must be a plain string literal")
-          applyTimeModifier(e, lit)
-        }
-        sql.substring(0, mm.start) +
-          s"date_format($wrapped, ${sqliteLiteral(strftimeToSpark(fmt))})" +
-          rewriteStrftime(sql.substring(end + 1))
-    }
   }
 }

@@ -268,7 +268,9 @@ private[excel] object ExcelSchema {
   }
 }
 
-private[excel] class ExcelTable(schema0: StructType, props: Map[String, String])
+/** A case class: two reads of one sheet with the same options are equal
+  * tables, so a fresh read finds the cache entry of a cached one. */
+private[excel] final case class ExcelTable(schema0: StructType, props: Map[String, String])
     extends Table with SupportsRead {
   override def name(): String =
     s"excel:${props.getOrElse("path", "?")}#${props.getOrElse("sheet", "<first>")}"

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into the `private[sql]` Column↔Expression seam.
   *
@@ -15,4 +16,10 @@ object GraftExpressionBridge {
 
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** The DataFrame of a parsed plan, analyzed as `spark.sql` would. */
+  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    s.withActive(classic.Dataset.ofRows(s, plan))
+  }
 }

@@ -109,6 +109,60 @@ class PipelineSpec extends SparkSpec {
     assert(cached == entries)
   }
 
+  test("registerViews: a fresh read of a registered sheet hits its cache entry") {
+    val dir = Files.createTempDirectory("pipeline-cache").toString
+    XlsxWriter.write(s"$dir/book.xlsx", Seq("Sheet1" -> spark.range(3).toDF("id")))
+    val sheets = Seq(Fsheet("book.xlsx", "Sheet1"))
+    val p = new Pipeline(spark, dir)
+    p.registerViews(sheets)
+    try {
+      val fresh = spark.read.format("excel").option("sheet", "Sheet1").load(s"$dir/book.xlsx")
+      assert(spark.sharedState.cacheManager.lookupCachedData(
+        fresh.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined)
+    } finally p.dropViews(sheets)
+  }
+
+  test("full run in the SQLite dialect: the same rows as the query in Spark's dialect") {
+    val dir = Files.createTempDirectory("pipeline-dialect").toString
+    def day(s: String) = java.sql.Date.valueOf(s)
+    val lines = Seq(("A", "F", 12L, day("2024-01-10")), ("A", "F", 30L, day("2024-01-20")),
+      ("N", "O", 20L, day("2024-02-14")), ("N", "O", 8L, day("2024-02-15")),
+      ("R", "F", 40L, day("2024-03-01")), ("a", "F", 50L, day("2024-03-02")))
+      .toDF("l_returnflag", "l_linestatus", "l_quantity", "l_shipdate")
+    XlsxWriter.write(s"$dir/book_00.xlsx", Seq("lineitem" -> lines))
+    // the books_scan shapes: double-quoted identifiers and aliases, a
+    // GLOB class, strftime with a modifier, a '' literal, a 'C:\' literal
+    val sqlite =
+      """SELECT "l_returnflag" AS "flag", strftime('%Y-%m', l_shipdate, '+1 month') AS "ship month",
+        |       COUNT(*) AS "n lines", 'it''s' AS q, 'C:\' AS p
+        |FROM lineitem.sheet
+        |WHERE "l_quantity" > 10 AND "l_returnflag" GLOB '[AN]'
+        |GROUP BY "l_returnflag", strftime('%Y-%m', l_shipdate, '+1 month')""".stripMargin
+    val bundle = QueryBundle(Seq(Query("dialect", sqlite, pivotTable = false)),
+      Seq("book_00"), Seq("lineitem"), "dialect_out", ExportFormat.Hyper)
+    spark.conf.set(SqliteDialect.ConfKey, "true")
+    try new Pipeline(spark, dir).run(Seq(bundle))
+    finally spark.conf.unset(SqliteDialect.ConfKey)
+    val Seq((_, _, got)) = HyperBinary.read(s"$dir/dialect_out.hyper/extract.hyper")
+
+    spark.read.format("excel").option("sheet", "lineitem").load(s"$dir/book_00.xlsx")
+      .createOrReplaceTempView("dialect_lineitem")
+    val expected = try spark.sql(
+      """SELECT l_returnflag, date_format(l_shipdate + INTERVAL 1 MONTH, 'yyyy-MM'),
+        |       COUNT(*), 'it\'s', 'C:\\'
+        |FROM dialect_lineitem
+        |WHERE l_quantity > 10 AND l_returnflag RLIKE '^[AN]$'
+        |GROUP BY l_returnflag, date_format(l_shipdate + INTERVAL 1 MONTH, 'yyyy-MM')""".stripMargin)
+      .collect().map(_.toSeq).toSeq
+    finally spark.catalog.dropTempView("dialect_lineitem")
+    def sorted(rows: Seq[Seq[Any]]) = rows.map(_.mkString("|")).sorted
+    assert(sorted(got.toSeq.map(_.toSeq)) == sorted(expected))
+    assert(sorted(expected) == Seq("A|2024-02|2|it's|C:\\", "N|2024-03|1|it's|C:\\"))
+    // the dialect's parse settings stay out of the session: "x" is
+    // still a string literal in Spark's own dialect
+    assert(spark.sql("SELECT \"x\"").head.getString(0) == "x")
+  }
+
   test("sheet-ref rewrite: documented contract + punctuation edge (Q3)") {
     val q = Query("t", "SELECT * FROM Sheet1.sheet WHERE x=1", pivotTable = false)
     assert(q.formatQuery("consumer_complaints.xlsx") ==

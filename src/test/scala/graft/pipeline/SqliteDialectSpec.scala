@@ -7,6 +7,8 @@ import graft.SparkSpec
 class SqliteDialectSpec extends SparkSpec {
   import spark.implicits._
 
+  private def dialect(sqliteSql: String) = SqliteDialect.sql(spark, sqliteSql)
+
   test("globToLike wildcard and escape translation") {
     assert(SqliteDialect.globToLike("*green*") == "%green%")
     assert(SqliteDialect.globToLike("a?c") == "a_c")
@@ -23,30 +25,35 @@ class SqliteDialectSpec extends SparkSpec {
 
   test("rewrite: integrated GLOB / strftime / quoted-identifier translation") {
     val in = """SELECT "order id", strftime('%Y-%m', order_ts) AS ym
-      FROM t WHERE name GLOB 'A*' AND note GLOB '?_x'"""
+      FROM sqlite_integrated_t WHERE name GLOB 'A*' AND note GLOB '?_x'"""
     val out = SqliteDialect.rewrite(in)
-    assert(out.contains("`order id`"))
-    assert(out.contains("date_format(order_ts, 'yyyy-MM') AS ym"))
     assert(out.contains("LIKE 'A%'"))
     assert(out.contains("LIKE '_\\\\_x'")) // _ wildcard + escaped literal _
-    assert(!out.toLowerCase.contains("glob") && !out.toLowerCase.contains("strftime"))
+    assert(!out.toLowerCase.contains("glob"))
+    // the quoted identifier and strftime resolve in the entry point's
+    // parse and analysis
+    val ts = java.sql.Timestamp.valueOf("2024-03-05 07:08:09")
+    Seq((1, ts, "Alpha", "a_x"), (2, ts, "Alpha", "abx"), (3, ts, "Beta", "a_x"))
+      .toDF("order id", "order_ts", "name", "note")
+      .createOrReplaceTempView("sqlite_integrated_t")
+    try assert(dialect(in).as[(Int, String)].collect().toSeq == Seq((1, "2024-03")))
+    finally spark.catalog.dropTempView("sqlite_integrated_t")
   }
 
   test("rewrite: literals untouched, nested strftime, runnable end-to-end") {
     // 'GLOB' and 'strftime(' inside string literals must survive verbatim
     val lit = "SELECT 'uses GLOB and strftime(x) inside' AS s FROM t"
     assert(SqliteDialect.rewrite(lit) == lit)
-    // nested call in the expression argument
-    val nested = SqliteDialect.rewrite(
-      "SELECT strftime('%Y', strftime('%Y-%m-%d', ts)) AS y FROM t")
-    assert(nested ==
-      "SELECT date_format(date_format(ts, 'yyyy-MM-dd'), 'yyyy') AS y FROM t")
-    // end-to-end through spark.sql
     Seq(("Alpha", java.sql.Timestamp.valueOf("2024-03-05 07:08:09")))
       .toDF("name", "order_ts").createOrReplaceTempView("sqlite_dialect_t")
-    val row = spark.sql(SqliteDialect.rewrite(
+    // nested call in the expression argument
+    val nested = dialect(
+      "SELECT strftime('%Y', strftime('%Y-%m-%d', order_ts)) AS y FROM sqlite_dialect_t")
+    assert(nested.as[String].collect().toSeq == Seq("2024"))
+    // end-to-end through the entry point
+    val row = dialect(
       """SELECT "name", strftime('%Y-%m', order_ts) AS ym
-         FROM sqlite_dialect_t WHERE name GLOB 'Al*'"""))
+         FROM sqlite_dialect_t WHERE name GLOB 'Al*'""")
       .collect()
     assert(row.length == 1 && row(0).getString(1) == "2024-03")
   }
@@ -77,19 +84,25 @@ class SqliteDialectSpec extends SparkSpec {
     // round 7: GLOB classes and common strftime modifiers now TRANSLATE
     // (formerly friendly errors); only the genuinely unmappable
     // modifiers still error
+    val from = " FROM VALUES (TIMESTAMP '2024-01-03 10:30:00', 1092941466, '+1 day') AS t(ts, v, x)"
     val m = intercept[UnsupportedSqlFeatureException] {
-      SqliteDialect.rewrite("SELECT strftime('%Y', ts, 'localtime') FROM t")
+      dialect("SELECT strftime('%Y', ts, 'localtime')" + from)
     }
     assert(m.getMessage.startsWith("unsupported: strftime modifier 'localtime'"))
     // round 9: 'weekday N' and 'unixepoch' now TRANSLATE (no throw)
-    SqliteDialect.rewrite("SELECT strftime('%Y', ts, 'weekday 1') FROM t")
-    SqliteDialect.rewrite("SELECT strftime('%Y', v, 'unixepoch') FROM t")
+    dialect("SELECT strftime('%Y', ts, 'weekday 1')" + from)
+    dialect("SELECT strftime('%Y', v, 'unixepoch')" + from)
     intercept[UnsupportedSqlFeatureException] {
-      SqliteDialect.rewrite("SELECT strftime('%Y', ts, 'julianday') FROM t")
+      dialect("SELECT strftime('%Y', ts, 'julianday')" + from)
     }
-    intercept[UnsupportedSqlFeatureException] {
-      SqliteDialect.rewrite("SELECT strftime('%Y', ts, x) FROM t") // non-literal
+    val nonLiteral = intercept[UnsupportedSqlFeatureException] {
+      dialect("SELECT strftime('%Y', ts, x)" + from)
     }
+    assert(nonLiteral.getMessage.startsWith("unsupported: strftime with a non-literal modifier"))
+    val format = intercept[UnsupportedSqlFeatureException] {
+      dialect("SELECT strftime(x, ts)" + from)
+    }
+    assert(format.getMessage.startsWith("unsupported: strftime with non-literal format"))
   }
 
   test("globToRegex: classes, negation, anchoring, metachar escaping") {
@@ -109,44 +122,43 @@ class SqliteDialectSpec extends SparkSpec {
   }
 
   test("strftime modifiers: interval arithmetic, start-of, utc, left-to-right") {
-    val out = SqliteDialect.rewrite(
-      "SELECT strftime('%Y-%m', ts, '+1 month', 'start of month') FROM t")
-    assert(out.contains(
-      "date_format(date_trunc('MONTH', (ts + INTERVAL 1 MONTH)), 'yyyy-MM')"),
-      out)
-    val back = SqliteDialect.rewrite(
-      "SELECT strftime('%Y', ts, '-3 days', 'utc') FROM t")
-    assert(back.contains("date_format((ts - INTERVAL 3 DAY), 'yyyy')"), back)
+    def one(select: String, ts: String): String =
+      dialect(s"SELECT $select FROM VALUES (TIMESTAMP '$ts') AS t(ts)").as[String].head()
+    assert(one("strftime('%Y-%m-%d', ts, '+1 month', 'start of month')",
+      "2024-01-15 10:00:00") == "2024-02-01")
+    assert(one("strftime('%Y-%m-%d %H', ts, '+1 month')", "2024-01-15 10:00:00") ==
+      "2024-02-15 10")
+    assert(one("strftime('%Y-%m-%d', ts, '-3 days', 'utc')", "2024-01-02 10:00:00") ==
+      "2023-12-30")
+    assert(one("strftime('%Y %H:%M:%S', ts, '+2 years', '-5 hours', '+7 minutes', '+9 seconds')",
+      "2024-01-02 10:00:00") == "2026 05:07:09")
     // modifier order matters (SQLite applies left to right): start of
     // month THEN +1 day lands on the 2nd; reversed lands on the 1st
-    val ordered = SqliteDialect.rewrite(
-      "SELECT strftime('%d', ts, 'start of month', '+1 day') FROM t")
-    assert(ordered.contains(
-      "date_format((date_trunc('MONTH', ts) + INTERVAL 1 DAY), 'dd')"),
-      ordered)
+    assert(one("strftime('%d', ts, 'start of month', '+1 day')", "2024-01-31 10:00:00") == "02")
+    assert(one("strftime('%d', ts, '+1 day', 'start of month')", "2024-01-31 10:00:00") == "01")
   }
 
   test("strftime 'weekday N' / 'unixepoch' modifiers run with SQLite " +
       "semantics (round-9 residuals, formerly documented limits)") {
     // 2024-01-03 is a Wednesday: weekday 0 -> next Sunday 2024-01-07;
     // a date already on the target weekday stays put
-    val rows = spark.sql(SqliteDialect.rewrite(
+    val rows = dialect(
       "SELECT strftime('%Y-%m-%d', d, 'weekday 0') AS wd" +
         " FROM VALUES (TIMESTAMP '2024-01-03 10:30:00')," +
-        " (TIMESTAMP '2024-01-07 00:00:00') AS t(d) ORDER BY d"))
+        " (TIMESTAMP '2024-01-07 00:00:00') AS t(d) ORDER BY d")
       .collect().map(_.getString(0)).toSeq
     assert(rows == Seq("2024-01-07", "2024-01-07"))
     // time of day is preserved across the jump (SQLite keeps it)
-    val tod = spark.sql(SqliteDialect.rewrite(
+    val tod = dialect(
       "SELECT strftime('%H', d, 'weekday 0') AS h" +
-        " FROM VALUES (TIMESTAMP '2024-01-03 10:30:00') AS t(d)"))
+        " FROM VALUES (TIMESTAMP '2024-01-03 10:30:00') AS t(d)")
       .collect().head.getString(0)
     assert(tod == "10")
     // unixepoch reinterprets a numeric value as epoch seconds (UTC
     // session): 1092941466 = 2004-08-19 (sqlite.org's own example)
-    val ue = spark.sql(SqliteDialect.rewrite(
+    val ue = dialect(
       "SELECT strftime('%Y-%m-%d', v, 'unixepoch') AS e" +
-        " FROM VALUES (1092941466) AS t(v)"))
+        " FROM VALUES (1092941466) AS t(v)")
       .collect().head.getString(0)
     assert(ue == "2004-08-19")
   }
@@ -411,13 +423,11 @@ class SqliteDialectSpec extends SparkSpec {
     val out = SqliteDialect.rewrite(
       """SELECT x FROM t WHERE p = 'C:\' AND s GLOB 'a*'""")
     assert(out == """SELECT x FROM t WHERE p = 'C:\\' AND s LIKE 'a%'""")
-    // '' is the SQLite quote escape; Spark would read adjacent literals
-    // as concatenation ("its"), so it must transcode to \'
-    assert(SqliteDialect.rewrite("SELECT 'it''s' AS s FROM t") ==
-      """SELECT 'it\'s' AS s FROM t""")
-    // end-to-end: the transcoded literal means what the SQLite one did
-    val v = spark.sql(SqliteDialect.rewrite("SELECT 'it''s' AS s")).head.getString(0)
-    assert(v == "it's")
+    // '' is the SQLite quote escape, and Spark's lexer reads it the
+    // same way: end-to-end, both literals mean what the SQLite ones did
+    val r = dialect("""SELECT 'C:\' AS p, 'it''s' AS s, "it""s" FROM VALUES (1) AS t("it""s")""")
+      .head()
+    assert((r.getString(0), r.getString(1), r.getInt(2)) == ("C:\\", "it's", 1))
   }
 
   test("review regressions: literal letter runs, groups column, glob identifier") {
@@ -441,8 +451,8 @@ class SqliteDialectSpec extends SparkSpec {
     // identifiers named/containing glob survive the rewrite untouched
     assert(SqliteDialect.rewrite("SELECT glob FROM t WHERE glob = 3") ==
       "SELECT glob FROM t WHERE glob = 3")
-    assert(SqliteDialect.rewrite("""SELECT "my GLOB col" FROM t""") ==
-      "SELECT `my GLOB col` FROM t")
+    assert(dialect("""SELECT "my GLOB col" FROM VALUES (5) AS t("my GLOB col")""")
+      .as[Int].head() == 5)
     // and a real GLOB after a glob-ish identifier still rewrites
     assert(SqliteDialect.rewrite("SELECT glob FROM t WHERE s GLOB 'a*'") ==
       "SELECT glob FROM t WHERE s LIKE 'a%'")
@@ -458,7 +468,7 @@ class SqliteDialectSpec extends SparkSpec {
       withApostrophe.foreach { in =>
         val out = SqliteDialect.rewrite(in)
         assert(!out.contains("--") && !out.contains("/*"), out)
-        assert(spark.sql(out).as[String].collect().toSeq === Seq("Acme"))
+        assert(dialect(in).as[String].collect().toSeq === Seq("Acme"))
       }
       assert(SqliteDialect.rewrite("SELECT a FROM t -- it's") === "SELECT a FROM t  ")
       assert(spark.sql(SqliteDialect.rewrite("SELECT a FROM t -- it's"))
@@ -480,12 +490,35 @@ class SqliteDialectSpec extends SparkSpec {
     finally spark.catalog.dropTempView("bt")
 
     val ship = """SELECT strftime('%Y-%m', "ship,date") AS ym FROM st"""
-    val out = SqliteDialect.rewrite(ship)
-    assert(out === "SELECT date_format(`ship,date`, 'yyyy-MM') AS ym FROM st")
     Seq(java.sql.Timestamp.valueOf("2024-03-05 07:08:09")).toDF("ship,date")
       .createOrReplaceTempView("st")
-    try assert(spark.sql(out).as[String].head() === "2024-03")
+    try assert(dialect(ship).as[String].head() === "2024-03")
     finally spark.catalog.dropTempView("st")
+  }
+
+  test("sql: strftime is registered on a session's first dialect query, once") {
+    // a session built without GraftSparkExtensions
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("strftime")
+    assert(!registry.functionExists(id))
+    val q = "SELECT strftime('%Y-%m', d) FROM VALUES (DATE '2024-03-05') AS t(d)"
+    assert(SqliteDialect.sql(fresh, q).as[String](org.apache.spark.sql.Encoders.STRING)
+      .collect().toSeq == Seq("2024-03"))
+    assert(registry.functionExists(id))
+    assert(SqliteDialect.sql(fresh, q).collect().length == 1)
+  }
+
+  test("sql: double-quoted identifiers parse with ANSI off, and the session keeps its semantics") {
+    val lenient = spark.newSession()
+    lenient.conf.set("spark.sql.ansi.enabled", "false")
+    val r = SqliteDialect.sql(lenient,
+      """SELECT "v w" AS "out", CAST('abc' AS INT) AS c FROM VALUES (7) AS t("v w")""").head()
+    // the identifier read; the cast is the session's non-ANSI one (NULL,
+    // not an error): only the parse saw the identifier setting
+    assert(r.getInt(0) == 7 && r.isNullAt(1))
+    assert(lenient.conf.get("spark.sql.ansi.enabled") == "false")
+    assert(lenient.sql("SELECT \"x\"").head.getString(0) == "x")
   }
 
   test("strftime directives map to Spark date_format patterns") {
