@@ -14,13 +14,20 @@ final case class Fsheet(fileName: String, sheet: String) {
     if (dot > 0) fileName.substring(0, dot) else fileName
   }
   lazy val sqlTableName: String = s"${baseName}_${sheet}_sheet"
+
+  /** [[sqlTableName]] as a backtick-quoted identifier, for wherever the
+    * name is parsed: a file name may hold `-`, spaces or dots
+    * (`sales-2024.xlsx`, `q1.v2.xlsx`).
+    */
+  lazy val sqlIdentifier: String = "`" + sqlTableName.replace("`", "``") + "`"
 }
 
 /** A named SQL query + pivot flag — reference query.py:5-10. */
 final case class Query(name: String, sql: String, pivotTable: Boolean) {
 
   /** Rewrite `<Sheet>.sheet` tokens to the physical table name for the
-    * given file — reference query.py:13-27 (format_query).
+    * given file, quoted ([[Fsheet.sqlIdentifier]]) — reference
+    * query.py:13-27 (format_query).
     *
     * The documented contract (reference query_bundle.py:22-24) is that
     * sheet references are written `<SheetName>.sheet`, whitespace-
@@ -29,13 +36,9 @@ final case class Query(name: String, sql: String, pivotTable: Boolean) {
     * split-on-single-space implementation silently drops a trailing
     * comma (quirk Q3 in SURVEY.md §2.F; deliberately not replicated).
     */
-  def formatQuery(fileName: String): String = {
-    val base = Fsheet(fileName, "").baseName
-    Query.SheetRef.replaceAllIn(sql, m => {
-      val sheetName = m.group(1)
-      java.util.regex.Matcher.quoteReplacement(s"${base}_${sheetName}_sheet")
-    })
-  }
+  def formatQuery(fileName: String): String =
+    Query.SheetRef.replaceAllIn(sql, m =>
+      java.util.regex.Matcher.quoteReplacement(Fsheet(fileName, m.group(1)).sqlIdentifier))
 }
 
 object Query {

@@ -92,31 +92,25 @@ class Pipeline(spark: SparkSession, workingDir: String) {
       loaded.foreach(_.foreach(_.unpersist()))
       throw e
     }
-    fsheets.zip(loaded).foreach { case (fs, df) => df.get.createOrReplaceTempView(fs.sqlTableName) }
+    fsheets.zip(loaded).foreach { case (fs, df) => df.get.createOrReplaceTempView(fs.sqlIdentifier) }
   }
 
   def dropViews(fsheets: Seq[Fsheet]): Unit =
     fsheets.foreach(fs => spark.catalog.dropTempView(fs.sqlTableName))
 
   /** A7+A8+A9 — per (query, match) fan-out: rewrite `.sheet` tokens for
-    * the matched file, run through Catalyst, post-process per pivot flag
+    * the matched file, run as SQLite SQL through Catalyst
+    * ([[SqliteDialect.sql]]), post-process per pivot flag
     * (query_iterator.py:109-139).
     */
   def queryDataFrames(
       bundle: QueryBundle, matched: Map[String, String])
       : Map[String, Seq[(String, DataFrame)]] = {
-    val sqliteDialect =
-      spark.conf.get(SqliteDialect.ConfKey, "false").toBoolean
     bundle.queries.map { q =>
       q.name -> bundle.fileMatches.map { m =>
         val file = matched(m)
-        val formatted = q.formatQuery(file)
-        // SQLite SQL goes through the dialect's one entry point; in
-        // Spark's dialect, features Spark lacks (GROUPS frames) fail
-        // with a friendly one-liner, not a raw Catalyst parse error
-        val df =
-          if (sqliteDialect) SqliteDialect.sql(spark, formatted)
-          else { SqliteDialect.preflight(formatted); spark.sql(formatted) }
+        // the reference hands user SQL to SQLite (query_iterator.py:131)
+        val df = SqliteDialect.sql(spark, q.formatQuery(file))
         // A10: non-pivot results get match-prefixed columns
         // (query_iterator.py:111-119,133-134)
         val out = if (q.pivotTable) df else Combinators.prefixColumns(df, m)

@@ -5,30 +5,33 @@ import scala.util.matching.Regex
 import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AnyValue}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.util.DateTimeConstants._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DayTimeIntervalType => DT, StringType, YearMonthIntervalType => YM}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A feature of the SQLite pass-through surface that Spark's SQL engine
-  * genuinely lacks — raised by the dialect preflight so users get a
-  * clear one-line diagnosis instead of a raw Catalyst parse error.
+  * genuinely lacks — raised by the dialect's rewrites and its `strftime`
+  * so users get a clear one-line diagnosis instead of a raw Catalyst
+  * parse error.
   */
 final class UnsupportedSqlFeatureException(val feature: String, detail: String)
   extends IllegalArgumentException(
     s"unsupported: $feature — $detail (see SCALE.md, 'dialect limits')")
 
 /** The SQLite pass-through surface (SURVEY.md §2.C). [[sql]] is the one
-  * way SQLite SQL reaches Spark; the pipeline calls it behind
-  * `spark.graft.sqlite.dialect` (the same flag family as
-  * [[graft.plans.SqliteBareColumnRule]]).
+  * way SQLite SQL reaches Spark, and every pipeline query takes it.
   *
   * Spark's own front end does what it can: its parser reads `"…"` as an
   * identifier (`spark.sql.ansi.doubleQuotedIdentifiers`) and `''` as a
-  * quote inside a literal, and `strftime` is a session function built
-  * from the analyzer's resolved arguments. Text is rewritten only where
-  * Spark has no syntax: GLOB, GROUPS frames, frame EXCLUDE clauses, and
-  * backslashes (ordinary characters in SQLite, escapes to Spark).
+  * quote inside a literal, `strftime` is a session function built from
+  * the analyzer's resolved arguments, and a bare column of an aggregate
+  * becomes Spark's `any_value` between resolution and the analysis
+  * check. Text is rewritten only where Spark has no syntax: GLOB, GROUPS
+  * frames, frame EXCLUDE clauses, and backslashes (ordinary characters
+  * in SQLite, escapes to Spark).
   *
   * Reference seam: the reference passes user SQL strings verbatim to
   * SQLite (`query_iterator.py:131`), so any SQLite-only syntax its users
@@ -36,20 +39,48 @@ final class UnsupportedSqlFeatureException(val feature: String, detail: String)
   */
 object SqliteDialect {
 
-  /** Session conf key routing the pipeline's queries through [[sql]]. */
+  /** The former switch of the pipeline's SQL path. Nothing here reads
+    * it: pipeline SQL is always SQLite SQL. It stays only because the
+    * benchmark harness (`perfbench/Work.scala`) still sets it.
+    */
   val ConfKey = "spark.graft.sqlite.dialect"
 
   /** SQLite SQL → DataFrame: [[rewrite]], a parse that reads `"…"` as an
     * identifier, then analysis under the session's own conf, where the
-    * `strftime` calls resolve to [[strftime]].
+    * `strftime` calls resolve to [[strftime]] and bare columns become
+    * `any_value` ([[anyValueBareColumns]]) before the analysis check.
     */
   def sql(spark: SparkSession, sqliteSql: String): DataFrame = {
     registerStrftime(spark)
     val text = rewrite(sqliteSql)
     val plan = SQLConf.withExistingConf(identifierConf(spark))(
       spark.sessionState.sqlParser.parsePlan(text))
-    GraftExpressionBridge.dataFrame(spark, plan)
+    GraftExpressionBridge.dataFrame(spark, plan)(anyValueBareColumns)
   }
+
+  /** SQLite lets an aggregate query select a column that is neither
+    * grouped nor aggregated (a "bare column"), taking its value from an
+    * arbitrary row of the group; the reference's own example query 1
+    * does (`SELECT company, product, COUNT(product) … GROUP BY product`,
+    * run_main_example.py:14-18). Spark's `any_value` is that aggregate,
+    * so each bare column of a resolved [[Aggregate]] becomes one. A bare
+    * output column keeps its expression id, so the HAVING, ORDER BY and
+    * outer-query references already resolved to it stay valid.
+    */
+  private def anyValueBareColumns(plan: LogicalPlan): LogicalPlan =
+    plan.transformUpWithSubqueries { case agg: Aggregate =>
+      def grouped(e: Expression) = agg.groupingExpressions.exists(_.semanticEquals(e))
+      def anyValue(e: Expression): Expression = e match {
+        case _: AggregateExpression => e
+        case _ if grouped(e) => e
+        case a: Attribute => AnyValue(a, ignoreNulls = false).toAggregateExpression()
+        case _ => e.mapChildren(anyValue)
+      }
+      agg.copy(aggregateExpressions = agg.aggregateExpressions.map {
+        case a: Attribute if !grouped(a) => Alias(anyValue(a), a.name)(exprId = a.exprId)
+        case e => anyValue(e).asInstanceOf[NamedExpression]
+      })
+    }
 
   /** A copy of the session conf whose parser reads `"…"` as an
     * identifier. Spark honours `spark.sql.ansi.doubleQuotedIdentifiers`
@@ -81,15 +112,14 @@ object SqliteDialect {
     *   1. frame EXCLUDE clauses → window arithmetic ([[rewriteExclude]]);
     *   2. GROUPS window frames → RANGE (over a hoisted `dense_rank()`
     *      for numeric bounds) — [[rewriteGroups]]; untranslatable
-    *      shapes raise the friendly preflight error;
+    *      shapes raise a friendly [[UnsupportedSqlFeatureException]];
     *   3. `expr GLOB 'pat'` → `expr LIKE '<translated>'`, or
     *      `expr RLIKE '<anchored regex>'` when the pattern carries
     *      `[...]` character classes ([[globToRegex]]);
     *   4. backslashes made literal for Spark's lexer
     *      ([[transcodeLiterals]]), so the legal SQLite literal `'C:\'`
     *      reaches Spark as `'C:\\'`. All scans before this step lex the
-    *      text as SQLite does ([[maskStrings]] with
-    *      `backslashEscapes = false`).
+    *      text as SQLite does ([[quoteEnd]]).
     * `"…"` identifiers, `''` quotes and `strftime` calls pass through for
     * [[sql]]'s parse and analysis.
     */
@@ -103,18 +133,14 @@ object SqliteDialect {
   /** Index just past the quoted span opening at `start` — a '…' literal,
     * a "…" or `…` identifier — or -1 if the input ends inside it. A
     * doubled quote character stands for itself and continues the span.
-    * Backslash is an ordinary character, as in SQLite; with
-    * `backslashEscapes` (Spark's default lexing) it escapes the next
-    * character inside '…' and "…". Backtick spans have no escape
-    * character in either dialect.
+    * Backslash is an ordinary character, as in SQLite.
     */
-  private def quoteEnd(sql: String, start: Int, backslashEscapes: Boolean = false): Int = {
+  private def quoteEnd(sql: String, start: Int): Int = {
     val q = sql.charAt(start)
     var i = start + 1
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (c == '\\' && backslashEscapes && q != '`') i += 2
-      else if (c != q) i += 1
+      if (c != q) i += 1
       else if (i + 1 < sql.length && sql.charAt(i + 1) == q) i += 2
       else return i + 1
     }
@@ -151,23 +177,15 @@ object SqliteDialect {
   /** Positions-preserving mask: the characters inside every quoted span
     * are blanked so regex scans can't match into them; the quote
     * characters that open and close a span survive, keeping offsets
-    * aligned with the original. Double-quoted spans are masked because
-    * preflight also sees Spark-dialect SQL, where `"..."` is a string
-    * literal; in SQLite-dialect input the same span is a quoted
-    * identifier, equally off-limits to keyword scans.
-    *
-    * `backslashEscapes` selects the lexing convention ([[quoteEnd]]).
-    * The PREFLIGHT path sees Spark-dialect SQL, where a backslash
-    * escapes the next character (`'it\'s'`); the DIALECT path sees
-    * SQLite SQL, where a literal may legally END in a backslash
-    * (`'C:\'`).
+    * aligned with the original. Quoted identifiers are masked too: a
+    * column named `"x GROUPS y"` is off-limits to keyword scans.
     */
-  private def maskStrings(sql: String, backslashEscapes: Boolean): String = {
+  private def maskStrings(sql: String): String = {
     val out = sql.toCharArray
     var i = 0
     while (i < out.length) {
       if (isQuote(out(i))) {
-        val end = quoteEnd(sql, i, backslashEscapes)
+        val end = quoteEnd(sql, i)
         val close = if (end < 0) out.length else end - 1
         java.util.Arrays.fill(out, i + 1, close, ' ')
         i = close + 1
@@ -219,7 +237,7 @@ object SqliteDialect {
   private def sqliteLiteral(s: String): String =
     "'" + s.replace("'", "''") + "'"
 
-  // ---- preflight --------------------------------------------------------
+  // ---- frame patterns -------------------------------------------------
 
   /** Genuine frame syntax — a frame bound always ends in PRECEDING /
     * FOLLOWING / CURRENT ROW, so a column that happens to be named
@@ -227,8 +245,6 @@ object SqliteDialect {
     */
   private val FrameBound =
     "(UNBOUNDED\\s+(PRECEDING|FOLLOWING)|CURRENT\\s+ROW|\\d+\\s+(PRECEDING|FOLLOWING))"
-  private val GroupsFramePat =
-    s"(?i)\\bGROUPS\\s+(BETWEEN\\s+)?$FrameBound".r
 
   /** Broader frame-INTENT pattern for [[rewriteGroups]]: also catches
     * malformed/non-literal bounds (`GROUPS BETWEEN n PRECEDING …`) so
@@ -241,30 +257,6 @@ object SqliteDialect {
     (s"(?i)\\bGROUPS\\s+(BETWEEN\\s+.{0,60}?\\b(PRECEDING|FOLLOWING)\\b|$FrameBound)").r
 
   private val ExcludeKinds = "\\bEXCLUDE\\s+(NO\\s+OTHERS|CURRENT\\s+ROW|GROUP|TIES)\\b"
-
-  /** Friendly flagging of features the plain Spark-dialect path cannot
-    * express. GROUPS window frames (SQLite 3.28+ / postgres) have no
-    * native Spark equivalent — Spark implements ROWS and RANGE only —
-    * but the DIALECT rewrite emulates them ([[rewriteGroups]]); plain
-    * mode points the user there. (Recursive CTEs, a former entry here,
-    * ARE supported by Spark 4.1's native WITH RECURSIVE.)
-    */
-  def preflight(sql: String): Unit = {
-    val m = maskStrings(sql, backslashEscapes = true)
-    if (GroupsFramePat.findFirstIn(m).isDefined)
-      throw new UnsupportedSqlFeatureException("GROUPS window frames",
-        "Spark windows support ROWS and RANGE frames only; enable " +
-          "spark.graft.sqlite.dialect (the rewrite emulates GROUPS as " +
-          "RANGE over dense_rank()), or rewrite the frame as ROWS " +
-          "(identical when the ORDER BY key is unique)")
-    if (("(?i)" + ExcludeKinds).r.findFirstIn(m).isDefined)
-      throw new UnsupportedSqlFeatureException("window frame EXCLUDE clause",
-        "Spark has no frame exclusion; enable spark.graft.sqlite.dialect " +
-          "(the rewrite emulates EXCLUDE for SUM/COUNT/AVG as " +
-          "frame-minus-exclusion window arithmetic and for " +
-          "MIN/MAX/MEDIAN by splitting the ROWS frame around the " +
-          "current row)")
-  }
 
   // ---- GLOB ---------------------------------------------------------------
 
@@ -353,7 +345,7 @@ object SqliteDialect {
   private[pipeline] def rewriteGlob(sql: String): String = {
     def loop(s: String, from: Int): String = {
       "(?i)\\bGLOB\\b".r.findFirstMatchIn(
-        maskStrings(s, backslashEscapes = false).substring(from)) match {
+        maskStrings(s).substring(from)) match {
         case None => s
         case Some(mm) =>
           val kwStart = from + mm.start
@@ -637,7 +629,7 @@ object SqliteDialect {
     * rewritten approximately.
     */
   private[pipeline] def rewriteExclude(sql: String): String = {
-    val masked = maskStrings(sql, backslashEscapes = false)
+    val masked = maskStrings(sql)
     if ("(?i)\\bEXCLUDE\\b".r.findFirstIn(masked).isEmpty) return sql
     editWindows(sql, masked, "EXCLUDE", "EXCLUDE", ("(?i)" + ExcludeKinds).r) { spec =>
       val (open, close, span) = (spec.open, spec.close, spec.span)
@@ -901,7 +893,7 @@ object SqliteDialect {
     * untranslatable and always rejected.
     */
   private[pipeline] def rewriteGroups(sql: String): String = {
-    val masked = maskStrings(sql, backslashEscapes = false)
+    val masked = maskStrings(sql)
     if (GroupsIntentPat.findFirstIn(masked).isEmpty) return sql
     val depth = parenDepths(masked)
     // (partition-by text, order-by text) -> hoisted rank alias
@@ -978,7 +970,7 @@ object SqliteDialect {
     if (grankDefs.isEmpty) return edited
 
     // hoist the rank columns: wrap the outermost FROM in a subquery
-    val m2 = maskStrings(edited, backslashEscapes = false)
+    val m2 = maskStrings(edited)
     val d2 = parenDepths(m2)
     val firstUse = edited.indexOf("__graft_grank")
     val sel = "(?i)\\bSELECT\\b".r.findAllMatchIn(m2)

@@ -17,9 +17,17 @@ object GraftExpressionBridge {
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
 
-  /** The DataFrame of a parsed plan, analyzed as `spark.sql` would. */
-  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+  /** The DataFrame of a parsed plan, analyzed as `spark.sql` would,
+    * with `resolved` applied to the resolved plan before the analysis
+    * check. */
+  def dataFrame(spark: SparkSession, plan: LogicalPlan)(
+      resolved: LogicalPlan => LogicalPlan): DataFrame = {
     val s = spark.asInstanceOf[classic.SparkSession]
-    s.withActive(classic.Dataset.ofRows(s, plan))
+    s.withActive {
+      val analyzer = s.sessionState.analyzer
+      val analyzed = resolved(analyzer.execute(plan))
+      analyzer.checkAnalysis(analyzed)
+      classic.Dataset.ofRows(s, analyzed)
+    }
   }
 }

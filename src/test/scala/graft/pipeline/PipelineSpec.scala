@@ -140,9 +140,7 @@ class PipelineSpec extends SparkSpec {
         |GROUP BY "l_returnflag", strftime('%Y-%m', l_shipdate, '+1 month')""".stripMargin
     val bundle = QueryBundle(Seq(Query("dialect", sqlite, pivotTable = false)),
       Seq("book_00"), Seq("lineitem"), "dialect_out", ExportFormat.Hyper)
-    spark.conf.set(SqliteDialect.ConfKey, "true")
-    try new Pipeline(spark, dir).run(Seq(bundle))
-    finally spark.conf.unset(SqliteDialect.ConfKey)
+    new Pipeline(spark, dir).run(Seq(bundle))
     val Seq((_, _, got)) = HyperBinary.read(s"$dir/dialect_out.hyper/extract.hyper")
 
     spark.read.format("excel").option("sheet", "lineitem").load(s"$dir/book_00.xlsx")
@@ -166,15 +164,53 @@ class PipelineSpec extends SparkSpec {
   test("sheet-ref rewrite: documented contract + punctuation edge (Q3)") {
     val q = Query("t", "SELECT * FROM Sheet1.sheet WHERE x=1", pivotTable = false)
     assert(q.formatQuery("consumer_complaints.xlsx") ==
-      "SELECT * FROM consumer_complaints_Sheet1_sheet WHERE x=1")
+      "SELECT * FROM `consumer_complaints_Sheet1_sheet` WHERE x=1")
     // trailing comma survives (the reference's split-on-space drops it)
     val q2 = Query("t", "SELECT a FROM Sheet1.sheet, Other.sheet WHERE 1=1",
       pivotTable = false)
     assert(q2.formatQuery("f.xlsx") ==
-      "SELECT a FROM f_Sheet1_sheet, f_Other_sheet WHERE 1=1")
+      "SELECT a FROM `f_Sheet1_sheet`, `f_Other_sheet` WHERE 1=1")
     // `.sheet` inside a longer identifier is not rewritten
     val q3 = Query("t", "SELECT sheetmetal FROM Sheet1.sheets", pivotTable = false)
     assert(q3.formatQuery("f.xlsx") == "SELECT sheetmetal FROM Sheet1.sheets")
+    // the name is quoted, a backtick in it doubled
+    assert(q.formatQuery("sales `24`.v2.xlsx") ==
+      "SELECT * FROM `sales ``24``.v2_Sheet1_sheet` WHERE x=1")
+  }
+
+  test("full run: workbook names that are not plain identifiers") {
+    val dir = Files.createTempDirectory("pipeline-names").toString
+    val files = Seq("sales-2024.xlsx", "my book.xlsx", "q1.v2.xlsx")
+    files.foreach(f => XlsxWriter.write(s"$dir/$f", Seq("Sheet1" -> complaintsDf)))
+    val bundle = QueryBundle(
+      Seq(Query("n", "SELECT COUNT(*) AS n FROM Sheet1.sheet", pivotTable = true)),
+      files, Seq("Sheet1"), "names_out", ExportFormat.Hyper)
+    new Pipeline(spark, dir).run(Seq(bundle))
+    val Seq((_, _, rows)) = HyperBinary.read(s"$dir/names_out.hyper/extract.hyper")
+    assert(rows.map(_.mkString("|")).toSeq.sorted ==
+      Seq("my book|5", "q1.v2|5", "sales-2024|5"))
+    // every view was dropped
+    val names = files.map(f => Fsheet(f, "Sheet1").sqlTableName)
+    assert(spark.catalog.listTables().collect().map(_.name).toSeq.intersect(names).isEmpty)
+  }
+
+  test("full run: the reference's query 1 selects a bare column") {
+    val dir = setupDir()
+    // the shape of run_main_example.py:14-18: `company` is neither
+    // grouped nor aggregated
+    val q1 = Query("complaint_counts_by_company",
+      """SELECT company, product, COUNT(product) AS number_of_complaints
+         FROM Sheet1.sheet WHERE company='Bank of America'
+         GROUP BY product ORDER BY product""", pivotTable = true)
+    new Pipeline(spark, dir).run(Seq(bundles.head.copy(queries = Seq(q1))))
+    val Seq((_, schema, rows)) =
+      HyperBinary.read(s"$dir/complaints_by_bank.hyper/extract.hyper")
+    assert(schema.fieldNames.toSeq == Seq("index", "company", "product", "number_of_complaints"))
+    assert(rows.map(_.mkString("|")).toSeq.sorted == Seq(
+      "consumer_complaints1|Bank of America|Credit reporting|1",
+      "consumer_complaints1|Bank of America|Mortgage|2",
+      "consumer_complaints|Bank of America|Credit reporting|1",
+      "consumer_complaints|Bank of America|Mortgage|2"))
   }
 
   test("full run: pivot stack + positional concat into hyper-equivalent sink") {

@@ -58,29 +58,31 @@ class SqliteDialectSpec extends SparkSpec {
     assert(row.length == 1 && row(0).getString(1) == "2024-03")
   }
 
-  test("preflight: friendly errors for GROUPS frames and dialect edges") {
-    val e = intercept[UnsupportedSqlFeatureException] {
-      SqliteDialect.preflight(
-        "SELECT sum(x) OVER (ORDER BY x GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW) FROM t")
-    }
-    assert(e.getMessage.startsWith("unsupported: GROUPS window frames"))
-    // GROUPS as an identifier must NOT trip the check
-    SqliteDialect.preflight("SELECT groups FROM t WHERE groups > 3")
-    // and not inside string literals
-    SqliteDialect.preflight("SELECT 'GROUPS BETWEEN here' FROM t")
-    // backslash-escaped quotes (Spark default parser) must not invert
-    // the mask state: frame text inside a literal containing \' stays
-    // masked (no false reject)…
-    SqliteDialect.preflight(
-      """SELECT 'it\'s fine: GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW' FROM t""")
-    SqliteDialect.preflight(
-      """SELECT "say \"GROUPS UNBOUNDED PRECEDING\"" FROM t""")
-    // …and a REAL frame after such a literal is still detected (without
-    // escape handling the inverted state would mask it)
-    intercept[UnsupportedSqlFeatureException] {
-      SqliteDialect.preflight(
-        """SELECT 'a\'b' AS s, sum(x) OVER (ORDER BY x GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW) FROM t""")
-    }
+  test("sql: friendly errors for GROUPS frames and dialect edges") {
+    // a GROUPS frame runs, emulated (the rewriteGroups tests pin its text)
+    val vals = " FROM VALUES (1, 1), (1, 2), (2, 4) AS t(x, v)"
+    val frame = "sum(v) OVER (ORDER BY x GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW)"
+    assert(dialect(s"SELECT $frame AS s" + vals).as[Long].collect().sorted.toSeq ==
+      Seq(3L, 3L, 7L))
+    // GROUPS as an identifier is neither rewritten nor rejected
+    val ident = "SELECT groups FROM VALUES (4), (2) AS t(groups) WHERE groups > 3"
+    assert(SqliteDialect.rewrite(ident) == ident)
+    assert(dialect(ident).as[Int].collect().toSeq == Seq(4))
+    // and frame text inside a literal stays text
+    val inLiteral = "SELECT 'GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW' AS s"
+    assert(SqliteDialect.rewrite(inLiteral) == inLiteral)
+    assert(dialect(inLiteral).as[String].head() ==
+      "GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW")
+    // SQLite's quote escapes do not invert the mask state: frame text in
+    // a literal holding '' stays text, and a real frame after a literal
+    // ending in a backslash is still rewritten
+    val quoted = "SELECT 'it''s GROUPS UNBOUNDED PRECEDING' AS s, 'C:\\' AS p, " +
+      frame + " AS f" + vals
+    val out = SqliteDialect.rewrite(quoted)
+    assert(out.contains("'it''s GROUPS UNBOUNDED PRECEDING'"))
+    assert(!out.contains("ORDER BY x GROUPS"))
+    assert(dialect(quoted).as[(String, String, Long)].collect().sortBy(_._3).toSeq ==
+      Seq(3L, 3L, 7L).map(("it's GROUPS UNBOUNDED PRECEDING", "C:\\", _)))
     // round 7: GLOB classes and common strftime modifiers now TRANSLATE
     // (formerly friendly errors); only the genuinely unmappable
     // modifiers still error
@@ -440,13 +442,14 @@ class SqliteDialectSpec extends SparkSpec {
       .as[String].head()
     assert(out == "05 days")
     // a column named groups in a plain BETWEEN predicate is NOT a frame
-    SqliteDialect.preflight("SELECT * FROM t WHERE groups BETWEEN 1 AND 5")
+    val between = "SELECT * FROM VALUES (3), (7) AS t(groups) WHERE groups BETWEEN 1 AND 5"
+    assert(SqliteDialect.rewrite(between) == between)
+    assert(dialect(between).as[Int].collect().toSeq == Seq(3))
     // …but every real frame spelling still is
     Seq("GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW",
       "GROUPS UNBOUNDED PRECEDING", "GROUPS CURRENT ROW").foreach { fr =>
-      intercept[UnsupportedSqlFeatureException] {
-        SqliteDialect.preflight(s"SELECT sum(x) OVER (ORDER BY x $fr) FROM t")
-      }
+      val out = SqliteDialect.rewrite(s"SELECT sum(x) OVER (ORDER BY x $fr) FROM t")
+      assert(!out.contains("GROUPS") && out.contains("RANGE"), out)
     }
     // identifiers named/containing glob survive the rewrite untouched
     assert(SqliteDialect.rewrite("SELECT glob FROM t WHERE glob = 3") ==
@@ -497,7 +500,6 @@ class SqliteDialectSpec extends SparkSpec {
   }
 
   test("sql: strftime is registered on a session's first dialect query, once") {
-    // a session built without GraftSparkExtensions
     val fresh = spark.newSession()
     val registry = fresh.sessionState.functionRegistry
     val id = org.apache.spark.sql.catalyst.FunctionIdentifier("strftime")
@@ -519,6 +521,50 @@ class SqliteDialectSpec extends SparkSpec {
     assert(r.getInt(0) == 7 && r.isNullAt(1))
     assert(lenient.conf.get("spark.sql.ansi.enabled") == "false")
     assert(lenient.sql("SELECT \"x\"").head.getString(0) == "x")
+  }
+
+  /** One company per product, so each bare `company` has one value. */
+  private def complaints(): Unit =
+    Seq(("Bank of America", "Mortgage"), ("Bank of America", "Mortgage"),
+      ("Bank of America", "Credit reporting"), ("Wells Fargo & Company", "Credit card"))
+      .toDF("company", "product").createOrReplaceTempView("complaints")
+
+  test("sql: a bare column resolves to the group's value, as any_value") {
+    complaints()
+    // the reference's query-1 shape (run_main_example.py:14-18):
+    // `company` is selected but only `product` is grouped
+    val out = dialect(
+      """SELECT company, product, COUNT(product) AS number_of_complaints
+         FROM complaints WHERE company = 'Bank of America'
+         GROUP BY product ORDER BY product""").collect()
+    assert(out.map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq == Seq(
+      ("Bank of America", "Credit reporting", 1L), ("Bank of America", "Mortgage", 2L)))
+    // inside an expression, next to a grouped column and an aggregate
+    assert(dialect("SELECT upper(company) || product AS c, max(company) FROM complaints " +
+      "WHERE product = 'Credit card' GROUP BY product").head().toSeq ==
+      Seq("WELLS FARGO & COMPANYCredit card", "Wells Fargo & Company"))
+  }
+
+  test("spark.sql still rejects a bare column") {
+    complaints()
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT company, COUNT(product) FROM complaints GROUP BY product")
+    }
+    assert(e.getCondition == "MISSING_AGGREGATION", e.getMessage)
+  }
+
+  test("sql: bare columns in HAVING, ORDER BY and an outer query") {
+    complaints()
+    def rows(q: String) = dialect(q).collect().map(_.toSeq.mkString("|")).toSeq
+    assert(rows("""SELECT company, product, COUNT(*) AS n FROM complaints
+         GROUP BY product HAVING company <> 'Bank of America'""") ==
+      Seq("Wells Fargo & Company|Credit card|1"))
+    assert(rows("SELECT company, product FROM complaints GROUP BY product " +
+      "ORDER BY company DESC, product") == Seq("Wells Fargo & Company|Credit card",
+      "Bank of America|Credit reporting", "Bank of America|Mortgage"))
+    assert(rows("""SELECT company, n FROM
+         (SELECT company, COUNT(*) AS n FROM complaints GROUP BY product) q
+         WHERE n > 1""") == Seq("Bank of America|2"))
   }
 
   test("strftime directives map to Spark date_format patterns") {
