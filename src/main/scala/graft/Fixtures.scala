@@ -29,7 +29,7 @@ import graft.functions.{Curation, Dedup, Similarity, TextFunctions}
   * training is t33/t40's verb) — NEVER the consuming gate's own
   * dominant declared stage. A gate whose verb is "build X" keeps
   * building X inside its sample. Per-fixture build seconds are
-  * recorded in [[buildCosts]] and emitted by [[Bench]] as the
+  * recorded in [[buildCosts]] and emitted by [[GateRunner.time]] as the
   * `"fixtures"` map, so the warmup cost that moved out of per-gate
   * numbers stays visible in the artifact instead of landing silently
   * in elapsed − total.
@@ -38,7 +38,7 @@ object Fixtures {
 
   /** Wall seconds of every fixture build that has run in this JVM,
     * keyed by the fixture's short name (memo key minus the session /
-    * dir prefix). Read by [[Bench]] at emit time. */
+    * dir prefix). Read by [[GateRunner.Timing.emit]]. */
   private val buildSecs =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
 

@@ -1045,10 +1045,14 @@ object SparkEntry {
          ORDER BY o_orderkey""",
 
     // same modifier arithmetic unrolled (DuckDB's strftime takes
-    // (value, fmt) — reversed args, same directives)
+    // (value, fmt) — reversed args, same directives). DuckDB's month
+    // interval clamps at a month's end, SQLite's '+1 month' overflows
+    // into the next month (01-31 → 03-02), so the oracle moves the 1st
+    // of the month and adds the days back, as SQLite does.
     "q43_dialect_glob_strftime" ->
       """SELECT o_orderkey,
-           strftime(date_trunc('month', o_orderdate + INTERVAL 1 MONTH), '%Y-%m') AS next_month,
+           strftime(date_trunc('month', date_trunc('month', o_orderdate) + INTERVAL 1 MONTH
+             + (day(o_orderdate) - 1) * INTERVAL 1 DAY), '%Y-%m') AS next_month,
            o_orderpriority AS prio
          FROM orders
          WHERE regexp_matches(o_orderpriority, '^[12]-.*$')

@@ -535,6 +535,18 @@ object Similarity {
   private[graft] def semDedupGrowthLabelsPath(path: String) =
     s"$path/growth_labels"
 
+  /** A growth area, or None before its first epoch is written. The
+    * existence check comes first: reading a missing directory logs a
+    * `FileStreamSink` warning with a stack trace. A present directory
+    * with no data files (every epoch taken down) has no schema to
+    * infer, and reads as None too. */
+  private def readGrowth(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    else scala.util.Try(spark.read.parquet(dir)).toOption
+  }
+
   /** Absorbed-epoch markers are LINEAGE-SCOPED: epoch numbers restart
     * at 0 under a fresh checkpoint lineage, so an unscoped marker
     * from a PRIOR lineage's absorb would make the new lineage's
@@ -723,14 +735,13 @@ object Similarity {
     // bound and the touched cells prune at the listing
     val growthArchive =
       if (touched.isEmpty) None
-      else scala.util.Try(spark.read.parquet(semDedupGrowthPath(path)))
-        .toOption.map { g =>
-          growthBelow.fold(g)(n => g.filter(col("epoch") < n))
-            .filter(col("centroid_id")
-              .isin(touched.map(Integer.valueOf).toSeq: _*))
-            .select(col("vec_id"), col("embedding"),
-              col("centroid_id").cast(IntegerType).as("centroid_id"))
-        }
+      else readGrowth(spark, semDedupGrowthPath(path)).map { g =>
+        growthBelow.fold(g)(n => g.filter(col("epoch") < n))
+          .filter(col("centroid_id")
+            .isin(touched.map(Integer.valueOf).toSeq: _*))
+          .select(col("vec_id"), col("embedding"),
+            col("centroid_id").cast(IntegerType).as("centroid_id"))
+      }
     val archive = growthArchive.fold(baseArchive)(baseArchive.unionByName)
     // combined hot-cluster guard: |archive cell| + |increment cell|
     val hot = broadcast(
@@ -753,9 +764,8 @@ object Similarity {
       col("vec_id").as("id_b"), col("embedding").as("eb"))
     val baseLabels = readSemDedupLabels(spark, path)
       .select(col("vec_id").as("id_b"), col("rep_id"))
-    val archLabels = scala.util.Try(
-        spark.read.parquet(semDedupGrowthLabelsPath(path)))
-      .toOption.map { g =>
+    val archLabels = readGrowth(spark, semDedupGrowthLabelsPath(path))
+      .map { g =>
         baseLabels.unionByName(
           growthBelow.fold(g)(n => g.filter(col("epoch") < n))
             .select(col("vec_id").as("id_b"), col("rep_id")))
@@ -819,12 +829,10 @@ object Similarity {
     // recorded as markers INSIDE the staged root so a post-absorb
     // stream replay of a folded batch is recognized and skipped
     // instead of re-growing absorbed rows
-    val growthIdx = scala.util.Try(
-        spark.read.parquet(semDedupGrowthPath(path))).toOption
+    val growthIdx = readGrowth(spark, semDedupGrowthPath(path))
       .map(_.select(col("vec_id"), col("embedding"),
         col("centroid_id").cast(IntegerType).as("centroid_id")))
-    val growthLab = scala.util.Try(
-        spark.read.parquet(semDedupGrowthLabelsPath(path))).toOption
+    val growthLab = readGrowth(spark, semDedupGrowthLabelsPath(path))
       .map(_.select(col("vec_id"), col("rep_id")))
     val absorbedEpochs: Seq[Long] = {
       val p = new org.apache.hadoop.fs.Path(semDedupGrowthPath(path))

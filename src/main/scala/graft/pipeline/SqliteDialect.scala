@@ -440,8 +440,9 @@ object SqliteDialect {
 
   /** One SQLite datetime modifier applied to a time expression — the
     * left-to-right semantics of SQLite's `strftime(fmt, time, mod, …)`.
-    * Supported: signed `±N day/hour/minute/second/month/year`
-    * arithmetic → `t ± INTERVAL N UNIT`; `start of day/month/year` →
+    * Supported: signed `±N day/hour/minute/second` arithmetic →
+    * `t ± INTERVAL N UNIT`; `±N month/year` with SQLite's overflow past
+    * a month's end; `start of day/month/year` →
     * `date_trunc`; `utc` → no-op (the engine pins the session to UTC,
     * so times already ARE UTC); `weekday N`; `unixepoch`. Still
     * unsupported, loudly: `localtime` (needs a client zone the engine
@@ -453,6 +454,17 @@ object SqliteDialect {
     val StartOf = """start of (day|month|year)""".r
     val Weekday = """weekday ([0-6])""".r
     mod.trim.toLowerCase match {
+      // SQLite moves the month and keeps the day, so a day past the
+      // target month's end overflows into the next month ('2024-01-31'
+      // '+1 month' is 2024-03-02); a Spark month interval would clamp
+      // it to the 29th. Step back to the 1st, move the months, then add
+      // the days back — the time of day rides along untouched.
+      case Offset(sign, n, unit @ ("month" | "year")) =>
+        val i = interval(n.toLong, unit)
+        val pastFirst = new MakeInterval(Literal(0), Literal(0), Literal(0),
+          Subtract(DayOfMonth(t), Literal(1)), Literal(0), Literal(0), Literal(0))
+        val first = Subtract(t, pastFirst)
+        Add(if (sign == "+") Add(first, i) else Subtract(first, i), pastFirst)
       case Offset(sign, n, unit) =>
         val i = interval(n.toLong, unit)
         if (sign == "+") Add(t, i) else Subtract(t, i)

@@ -19,10 +19,6 @@ import graft.sinks.AtomicFile
   * is built incrementally while sheets stream out and the part is
   * written last (zip parts are order-independent), so streaming is
   * preserved; driver memory holds the DISTINCT strings only.
-  * `sharedStrings = false` restores inline-string cells — the exact
-  * profile of the reference's committed workbook (it has no
-  * sharedStrings.xml part; reference query_iterator.py:197-212 writes
-  * one sheet per query via openpyxl).
   *
   * Data is pulled with `toLocalIterator` so the driver never holds more
   * than one partition of rows; a single .xlsx is inherently a single
@@ -64,14 +60,14 @@ object XlsxWriter {
     * leaves the previous file at `path` as it was.
     */
   def write(path: String, sheets: Seq[(String, DataFrame)],
-      sharedStrings: Boolean = true, maxRows: Int = 1048575): Unit = {
+      maxRows: Int = 1048575): Unit = {
     require(maxRows > 0, s"XlsxWriter: maxRows must be positive (got $maxRows)")
     AtomicFile.write(Paths.get(path).toAbsolutePath)(
-      writeZip(_, sheets, sharedStrings, maxRows))
+      writeZip(_, sheets, maxRows))
   }
 
   private def writeZip(out: OutputStream, sheets: Seq[(String, DataFrame)],
-      sharedStrings: Boolean, maxRows: Int): Unit = {
+      maxRows: Int): Unit = {
     val zos = new ZipOutputStream(out)
     def entry(name: String, content: String): Unit = {
       zos.putNextEntry(new ZipEntry(name))
@@ -94,9 +90,7 @@ object XlsxWriter {
         """<Default Extension="xml" ContentType="application/xml"/>""" +
         """<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>""" +
         """<Override PartName="/xl/styles.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.styles+xml"/>""" +
-        (if (sharedStrings)
-          """<Override PartName="/xl/sharedStrings.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sharedStrings+xml"/>"""
-        else "") +
+        """<Override PartName="/xl/sharedStrings.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sharedStrings+xml"/>""" +
         (1 to n).map(i =>
           s"""<Override PartName="/xl/worksheets/sheet$i.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>"""
         ).mkString +
@@ -120,9 +114,7 @@ object XlsxWriter {
           s"""<Relationship Id="rId$i" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet$i.xml"/>"""
         ).mkString +
         s"""<Relationship Id="rId${n + 1}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/styles" Target="styles.xml"/>""" +
-        (if (sharedStrings)
-          s"""<Relationship Id="rId${n + 2}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/sharedStrings" Target="sharedStrings.xml"/>"""
-        else "") +
+        s"""<Relationship Id="rId${n + 2}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/sharedStrings" Target="sharedStrings.xml"/>""" +
         """</Relationships>""")
       // styles: xf 0 = general; xf 1 = datetime (builtin numFmt 22,
       // "m/d/yy h:mm"); xf 2 = date (builtin 14, "m/d/yy"). Written for
@@ -148,8 +140,7 @@ object XlsxWriter {
         w.write("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
         val schema = df.schema
         def stringCell(ref: String, s: String): String =
-          if (sharedStrings) s"""<c r="$ref" t="s"><v>${sstRef(s)}</v></c>"""
-          else s"""<c r="$ref" t="inlineStr"><is><t>${xmlEscape(s)}</t></is></c>"""
+          s"""<c r="$ref" t="s"><v>${sstRef(s)}</v></c>"""
         // header row
         w.write("<row r=\"1\">")
         schema.fields.zipWithIndex.foreach { case (f, c) =>
@@ -206,20 +197,18 @@ object XlsxWriter {
         zos.closeEntry()
       }
       // dictionary last: complete only after every sheet has streamed
-      if (sharedStrings) {
-        zos.putNextEntry(new ZipEntry("xl/sharedStrings.xml"))
-        val w = new java.io.OutputStreamWriter(zos, "UTF-8")
-        w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
-        w.write(s"""<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" count="$sstRefs" uniqueCount="${sstIndex.size}">""")
-        sstIndex.keysIterator.foreach { s =>
-          // xml:space: leading/trailing whitespace must survive readers
-          // that apply XML whitespace collapsing
-          w.write(s"""<si><t xml:space="preserve">${xmlEscape(s)}</t></si>""")
-        }
-        w.write("</sst>")
-        w.flush()
-        zos.closeEntry()
+      zos.putNextEntry(new ZipEntry("xl/sharedStrings.xml"))
+      val w = new java.io.OutputStreamWriter(zos, "UTF-8")
+      w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
+      w.write(s"""<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" count="$sstRefs" uniqueCount="${sstIndex.size}">""")
+      sstIndex.keysIterator.foreach { s =>
+        // xml:space: leading/trailing whitespace must survive readers
+        // that apply XML whitespace collapsing
+        w.write(s"""<si><t xml:space="preserve">${xmlEscape(s)}</t></si>""")
       }
+      w.write("</sst>")
+      w.flush()
+      zos.closeEntry()
     } finally zos.close()
   }
 }

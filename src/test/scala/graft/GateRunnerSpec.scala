@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /** The gate runner's mode bodies on the shared test session at sf0.001:
-  * gate selection, the verify and explain outputs, and the JSON escaper. */
+  * gate selection, the verify, explain, time and profile outputs, and
+  * the JSON escaper. */
 class GateRunnerSpec extends SparkSpec {
 
   private val two = "q01_filter_project,q03_group_multi"
@@ -68,6 +69,43 @@ class GateRunnerSpec extends SparkSpec {
       assert(headings === Seq("## q01_filter_project", "## q03_group_multi"))
       assert(text.contains("Scan parquet"))
     }
+  }
+
+  test("time measures the listed gates, emits one JSON line, writes no hints") {
+    withTempDir { dir =>
+      val hints = dir.resolve("hints.json")
+      val onFile = """{"q01_filter_project":0.5,"q03_group_multi":0.25}"""
+      Files.writeString(hints, onFile)
+      val t = new GateRunner.Timing(sf(), hints.toString, Some(two),
+        runs = 1, budgetS = 480)
+      val expired = GateRunner.time(spark, t)
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(buf) { t.emit(expired); t.emit(expired) } // prints once
+      val lines = buf.toString("UTF-8").linesIterator.toSeq
+      assert(lines.size === 1)
+      val json = new ObjectMapper().readTree(lines.head)
+      assert(json.fieldNames().asScala.toSeq === Seq("metric", "value", "unit",
+        "runs", "sf", "n_queries", "queries", "errors", "skipped", "fixtures",
+        "contention", "budget_expired", "refine_truncated", "elapsed", "slowest"))
+      assert(json.get("queries").fieldNames().asScala.toSet ===
+        Set("q01_filter_project", "q03_group_multi"))
+      assert(json.get("n_queries").asInt() === 2)
+      assert(json.get("errors").size() === 0 && json.get("skipped").size() === 0)
+      assert(!json.get("budget_expired").asBoolean())
+      assert(json.get("contention").has("quiet"))
+      // a listed run is a targeted re-measurement: the hints stay as they were
+      assert(Files.readString(hints) === onFile)
+    }
+  }
+
+  test("profile prints one section per listed gate") {
+    val buf = new java.io.ByteArrayOutputStream()
+    val report = Console.withOut(buf)(GateRunner.profile(spark, sf(), Some(two)))
+    val sections = report.linesIterator.filter(_.startsWith("== ")).toSeq
+    assert(sections.map(_.split("\\s+")(1)) ===
+      Seq("q01_filter_project", "q03_group_multi"))
+    assert(sections.forall(_.contains("wall=")), report)
+    assert(buf.toString("UTF-8") === report)
   }
 
   test("jsonString output parses back to the same string") {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
@@ -42,13 +43,16 @@ class ScaleOpsSpec extends SparkSpec {
     // warehouse dir is a static conf, set by SparkSpec at session build
     val c = Tables.df(spark, sf(), "customer")
     val o = Tables.df(spark, sf(), "orders")
-    Bucketing.writeBucketed(c.select("c_custkey", "c_mktsegment"),
-      "c_bucketed", "c_custkey", 4)
-    Bucketing.writeBucketed(o.select("o_custkey", "o_totalprice")
-      .withColumnRenamed("o_custkey", "c_custkey"),
-      "o_bucketed", "c_custkey", 4)
-    val joined = Bucketing.readBucketed(spark, "c_bucketed")
-      .join(Bucketing.readBucketed(spark, "o_bucketed"), "c_custkey")
+    // bucket metadata lives in the catalog, so bucketing needs
+    // saveAsTable, and the read goes through spark.table
+    def writeBucketed(df: DataFrame, table: String): Unit =
+      df.write.mode(SaveMode.Overwrite).bucketBy(4, "c_custkey")
+        .sortBy("c_custkey").format("parquet").saveAsTable(table)
+    writeBucketed(c.select("c_custkey", "c_mktsegment"), "c_bucketed")
+    writeBucketed(o.select("o_custkey", "o_totalprice")
+      .withColumnRenamed("o_custkey", "c_custkey"), "o_bucketed")
+    val joined = spark.table("c_bucketed")
+      .join(spark.table("o_bucketed"), "c_custkey")
     joined.collect() // materialize through AQE
     val p = joined.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange hashpartitioning"),

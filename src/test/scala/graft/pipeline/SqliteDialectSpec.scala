@@ -140,6 +140,20 @@ class SqliteDialectSpec extends SparkSpec {
     assert(one("strftime('%d', ts, '+1 day', 'start of month')", "2024-01-31 10:00:00") == "01")
   }
 
+  test("strftime month/year offsets overflow past a month's end like SQLite") {
+    def one(mod: String, ts: String): String =
+      dialect(s"SELECT strftime('%Y-%m-%d %H:%M', ts, '$mod') " +
+        s"FROM VALUES (TIMESTAMP '$ts') AS t(ts)").as[String].head()
+    // each expectation is what sqlite3 returns for the same call
+    assert(one("+1 month", "2024-01-31 10:30:00") == "2024-03-02 10:30")
+    assert(one("-1 month", "2024-03-31 10:30:00") == "2024-03-02 10:30")
+    assert(one("+1 year", "2024-02-29 10:30:00") == "2025-03-01 10:30")
+    assert(one("+13 months", "2024-01-31 10:30:00") == "2025-03-03 10:30")
+    // a DATE value takes the same path and stays a date
+    assert(dialect("SELECT strftime('%Y-%m-%d', d, '+1 month') " +
+      "FROM VALUES (DATE '2024-01-31') AS t(d)").as[String].head() == "2024-03-02")
+  }
+
   test("strftime 'weekday N' / 'unixepoch' modifiers run with SQLite " +
       "semantics (round-9 residuals, formerly documented limits)") {
     // 2024-01-03 is a Wednesday: weekday 0 -> next Sunday 2024-01-07;

@@ -260,18 +260,6 @@ class ExcelRoundTripSpec extends SparkSpec {
     val back = spark.read.format("excel").load(path)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     assert(back.toSeq == rows)
-
-    // opt-out restores the reference workbook profile (no sst part)
-    val inlinePath = tmp("inline.xlsx")
-    XlsxWriter.write(inlinePath, Seq("Sheet1" -> df), sharedStrings = false)
-    assert(partText(inlinePath, "xl/sharedStrings.xml").isEmpty)
-    val inlineSheet = partText(inlinePath, "xl/worksheets/sheet1.xml").get
-    assert(inlineSheet.contains("inlineStr"))
-    // the dictionary-encoded sheet XML is materially smaller on repeated
-    // strings (the uncompressed part is what parsers and memory pay for;
-    // DEFLATE masks the difference at toy sizes)
-    assert(sheet.length * 3 < inlineSheet.length * 2,
-      s"sheet ${sheet.length} vs inline ${inlineSheet.length}")
   }
 
   test("column pruning pushes into the scan") {
